@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import Q._
@@ -26,8 +25,8 @@ import Q._
   *
   * Determinism: the (value → tie-block) census and both cumulative
   * lanes are exact longs from the two-level bucketed prefix swap
-  * (shared [[RankSum.withRangeBucket]] — the q269 machinery verbatim,
-  * plus-block instead of pre-block cumulatives); each block's two arm
+  * (shared [[RankSum.prefixSums]] — the q269 lanes, plus the block
+  * itself for plus-block cumulatives); each block's two arm
   * terms are ONE fixed double tree over those longs (the q269
   * precedent — exact while N·M < 2⁵³, i.e. to ~9·10⁷ rows per arm,
   * bit-identical across engines beyond that because the tree is
@@ -56,32 +55,18 @@ object AndersonDarling {
   val q278 = GraftQuery(
     "q278_anderson_darling", {
       (s, d) => {
-        val obs = t(s, d, "events")
-          .select(col("value").as("v"),
-            pmod(col("user_id"), lit(2L)).as("g"))
         // eager census: the bucket swap and the totals fold both
         // consume it — without the checkpoint the corpus scan
         // re-executes per consumer (the q240 discipline)
-        val byVal = graft.Checkpoints.eager(obs.groupBy(col("v"))
-          .agg(sum(when(col("g") === 0L, 1L).otherwise(0L)).as("ta"),
-            sum(when(col("g") === 1L, 1L).otherwise(0L)).as("tb"),
-            count(lit(1)).as("t")))
-        val bucketed = RankSum.withRangeBucket(byVal, col("v"))
-        val wb = Window.orderBy(col("bkt"))
-          .rowsBetween(Window.unboundedPreceding, -1)
-        val offsets = bucketed.groupBy(col("bkt"))
-          .agg(sum(col("ta")).as("bta"), sum(col("tb")).as("btb"),
-            sum(col("t")).as("btt"))
-          .select(col("bkt"),
-            coalesce(sum(col("bta")).over(wb), lit(0L)).as("offa"),
-            coalesce(sum(col("btb")).over(wb), lit(0L)).as("offb"),
-            coalesce(sum(col("btt")).over(wb), lit(0L)).as("offt"))
-        val wv = Window.partitionBy(col("bkt")).orderBy(col("v"))
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        val cums = bucketed.join(broadcast(offsets), "bkt")
-          .withColumn("ma", col("offa") + sum(col("ta")).over(wv))
-          .withColumn("mb", col("offb") + sum(col("tb")).over(wv))
-          .withColumn("bb", col("offt") + sum(col("t")).over(wv))
+        val byVal = graft.Checkpoints.eager(
+          RankSum.armCensus(t(s, d, "events")))
+        // plus-block cumulatives: the pre-block prefix + the block
+        val cums = RankSum.prefixSums(byVal, col("v"),
+          Seq(col("ta") -> "ca", col("tb") -> "cb", col("t") -> "ct"),
+          col("v"))
+          .withColumn("ma", col("ca") + col("ta"))
+          .withColumn("mb", col("cb") + col("tb"))
+          .withColumn("bb", col("ct") + col("t"))
         val totals = byVal.agg(sum(col("ta")).as("na"),
           sum(col("tb")).as("nb"), sum(col("t")).as("nn"))
         def term(m: org.apache.spark.sql.Column,

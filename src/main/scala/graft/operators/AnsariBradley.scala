@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import Q._
@@ -43,27 +42,12 @@ object AnsariBradley {
   val q286 = GraftQuery(
     "q286_ansari_bradley", {
       (s, d) => {
-        val obs = t(s, d, "events")
-          .select(col("value").as("v"),
-            pmod(col("user_id"), lit(2L)).as("g"))
-        val byVal = graft.Checkpoints.eager(obs.groupBy(col("v"))
-          .agg(sum(when(col("g") === 0L, 1L).otherwise(0L)).as("ta"),
-            sum(when(col("g") === 1L, 1L).otherwise(0L)).as("tb"),
-            count(lit(1)).as("t")))
+        val byVal = graft.Checkpoints.eager(
+          RankSum.armCensus(t(s, d, "events")))
         val totals = byVal.agg(sum(col("ta")).as("na"),
           sum(col("tb")).as("nb"), sum(col("t")).as("nn"))
-        val bucketed = RankSum.withRangeBucket(byVal, col("v"))
-        val wb = Window.orderBy(col("bkt"))
-          .rowsBetween(Window.unboundedPreceding, -1)
-        val offsets = bucketed.groupBy(col("bkt"))
-          .agg(sum(col("t")).as("btt"))
-          .select(col("bkt"),
-            coalesce(sum(col("btt")).over(wb), lit(0L)).as("offt"))
-        val wv = Window.partitionBy(col("bkt")).orderBy(col("v"))
-          .rowsBetween(Window.unboundedPreceding, -1)
-        val cums = bucketed.join(broadcast(offsets), "bkt")
-          .withColumn("pre",
-            col("offt") + coalesce(sum(col("t")).over(wv), lit(0L)))
+        val cums = RankSum.prefixSums(byVal, col("v"),
+          Seq(col("t") -> "pre"), col("v"))
         // block positions lo..hi; tent-score block total via
         // triangular numbers split at ctr = (N+1) div 2 — exact
         // integer `div` arithmetic (x(x+1) is even), identical to the

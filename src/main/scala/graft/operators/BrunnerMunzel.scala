@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import Q._
@@ -42,32 +41,11 @@ object BrunnerMunzel {
   val q290 = GraftQuery(
     "q290_brunner_munzel", {
       (s, d) => {
-        val obs = t(s, d, "events")
-          .select(col("value").as("v"),
-            pmod(col("user_id"), lit(2L)).as("g"))
-        val byVal = graft.Checkpoints.eager(obs.groupBy(col("v"))
-          .agg(sum(when(col("g") === 0L, 1L).otherwise(0L)).as("ta"),
-            sum(when(col("g") === 1L, 1L).otherwise(0L)).as("tb"),
-            count(lit(1)).as("t")))
-        val bucketed = RankSum.withRangeBucket(byVal, col("v"))
-        val wb = Window.orderBy(col("bkt"))
-          .rowsBetween(Window.unboundedPreceding, -1)
-        val offsets = bucketed.groupBy(col("bkt"))
-          .agg(sum(col("ta")).as("bta"), sum(col("tb")).as("btb"),
-            sum(col("t")).as("btt"))
-          .select(col("bkt"),
-            coalesce(sum(col("bta")).over(wb), lit(0L)).as("offa"),
-            coalesce(sum(col("btb")).over(wb), lit(0L)).as("offb"),
-            coalesce(sum(col("btt")).over(wb), lit(0L)).as("offt"))
-        val wv = Window.partitionBy(col("bkt")).orderBy(col("v"))
-          .rowsBetween(Window.unboundedPreceding, -1)
-        val cums = bucketed.join(broadcast(offsets), "bkt")
-          .withColumn("ca",
-            col("offa") + coalesce(sum(col("ta")).over(wv), lit(0L)))
-          .withColumn("cb",
-            col("offb") + coalesce(sum(col("tb")).over(wv), lit(0L)))
-          .withColumn("ct",
-            col("offt") + coalesce(sum(col("t")).over(wv), lit(0L)))
+        val byVal = graft.Checkpoints.eager(
+          RankSum.armCensus(t(s, d, "events")))
+        val cums = RankSum.prefixSums(byVal, col("v"),
+          Seq(col("ta") -> "ca", col("tb") -> "cb", col("t") -> "ct"),
+          col("v"))
         // doubled midranks: overall r2 = 2ct + t + 1, within-arm
         // r2a = 2ca + ta + 1; doubled placement 2P = r2 − r2i
         val p2a = (lit(2L) * col("ct") + col("t")) -

@@ -27,55 +27,62 @@ import Q._
   */
 object ChiSquareDrift {
 
-  /** The test over a frame of (segment, event_type) factor pairs —
-    * one row per observation.
+  /** The χ² cell grid of factor columns `a` × `b` over `pairs` (one
+    * row per observation): one row per cell of the FULL |A|·|B| grid
+    * with its count `obs`, row/column margins `rt`/`ct`, total `n`,
+    * expected count `expd` = rt·ct/n and deviation `dev` = (o−e)²/e.
+    * Shared by [[independence]] and [[CramersV]].
     */
-  def independence(pairs: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = {
-    val observed = pairs
-      .groupBy(col("segment"), col("event_type"))
+  private[operators] def cellGrid(pairs: org.apache.spark.sql.DataFrame,
+      a: String, b: String): org.apache.spark.sql.DataFrame = {
+    val observed = pairs.groupBy(col(a), col(b))
       .agg(count(lit(1)).as("obs"))
     // UNOBSERVED cells are evidence too: a zero cell contributes
     // (0−e)²/e = e, and dropping it understates dependence (a fully
     // dependent 3×3 diagonal would score 400 instead of the correct
     // 600 — caught by the planted spec). Materialize the full
     // |A|·|B| grid; both factor domains are dimension-sized.
-    val cells = observed.select(col("segment")).distinct()
-      .crossJoin(observed.select(col("event_type")).distinct())
-      .join(observed, Seq("segment", "event_type"), "left")
+    val cells = observed.select(col(a)).distinct()
+      .crossJoin(observed.select(col(b)).distinct())
+      .join(observed, Seq(a, b), "left")
       .withColumn("obs", coalesce(col("obs"), lit(0L)))
-        val rows = cells.groupBy(col("segment"))
-          .agg(sum(col("obs")).as("rt"))
-        val colsT = cells.groupBy(col("event_type"))
-          .agg(sum(col("obs")).as("ct"))
-        val tot = cells.agg(sum(col("obs")).as("n"))
-        val per = cells
-          .join(broadcast(rows), "segment")
-          .join(broadcast(colsT), "event_type")
-          .join(broadcast(tot))
-          .withColumn("expd", col("rt").cast("double") *
-            col("ct").cast("double") / col("n").cast("double"))
-          .withColumn("dev",
-            (col("obs").cast("double") - col("expd")) *
-              (col("obs").cast("double") - col("expd")) / col("expd"))
-        val chi = per.agg(
-          sum(col("dev").cast("decimal(30,14)")).cast("double")
-            .as("chi2"),
-          ((countDistinct(col("segment")) - 1) *
-            (countDistinct(col("event_type")) - 1)).as("dof"))
-        per.join(broadcast(chi))
-          .select(col("segment"), col("event_type"), col("obs"),
-            // exp rendered from integer centi-units (half-up), not
-            // round() on the double — rt·ct/n lands exactly on .xx5
-            // boundaries where the engines' round() diverge (the q111
-            // trap; it bit this query at sf0.01). rt·ct·200 < 2⁶³
-            // through sf10; the decimal upgrade path is documented on
-            // q122's bound.
-            (expr("(rt * ct * 200 + n) div (2 * n)").cast("double")
-              / 100.0d).as("exp_r"),
-            round(col("dev"), 6).as("dev_r"),
-            round(col("chi2"), 6).as("chi2_r"), col("dof"))
-          .orderBy(col("segment"), col("event_type"))
+    val rt = cells.groupBy(col(a)).agg(sum(col("obs")).as("rt"))
+    val ct = cells.groupBy(col(b)).agg(sum(col("obs")).as("ct"))
+    val tot = cells.agg(sum(col("obs")).as("n"))
+    cells
+      .join(broadcast(rt), a).join(broadcast(ct), b)
+      .join(broadcast(tot))
+      .withColumn("expd", col("rt").cast("double") *
+        col("ct").cast("double") / col("n").cast("double"))
+      .withColumn("dev",
+        (col("obs").cast("double") - col("expd")) *
+          (col("obs").cast("double") - col("expd")) / col("expd"))
+  }
+
+  /** The test over a frame of (segment, event_type) factor pairs —
+    * one row per observation.
+    */
+  def independence(pairs: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame = {
+    val per = cellGrid(pairs, "segment", "event_type")
+    val chi = per.agg(
+      sum(col("dev").cast("decimal(30,14)")).cast("double")
+        .as("chi2"),
+      ((countDistinct(col("segment")) - 1) *
+        (countDistinct(col("event_type")) - 1)).as("dof"))
+    per.join(broadcast(chi))
+      .select(col("segment"), col("event_type"), col("obs"),
+        // exp rendered from integer centi-units (half-up), not
+        // round() on the double — rt·ct/n lands exactly on .xx5
+        // boundaries where the engines' round() diverge (the q111
+        // trap; it bit this query at sf0.01). rt·ct·200 < 2⁶³
+        // through sf10; the decimal upgrade path is documented on
+        // q122's bound.
+        (expr("(rt * ct * 200 + n) div (2 * n)").cast("double")
+          / 100.0d).as("exp_r"),
+        round(col("dev"), 6).as("dev_r"),
+        round(col("chi2"), 6).as("chi2_r"), col("dof"))
+      .orderBy(col("segment"), col("event_type"))
   }
 
   /** q162 — user segment (user_id mod 4) × event_type independence. */

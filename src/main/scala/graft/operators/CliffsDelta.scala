@@ -21,7 +21,7 @@ import Q._
   *
   * Scale shape: the classic O(n²) definition is rewritten as a
   * |distinct values| problem: one groupBy to the per-value frame, the
-  * q149 two-level bucketed prefix sum ([[RankSum.bucketedCum]]) for
+  * q149 two-level bucketed prefix sum ([[RankSum.prefixSums]]) for
   * the arm-B cumulative — no global single-partition window, no pair
   * join, corpus touched once.
   */
@@ -31,21 +31,17 @@ object CliffsDelta {
   val q250 = GraftQuery(
     "q250_cliffs_delta", {
       (s, d) => {
-        val ev = t(s, d, "events")
-          .select(col("value").as("v"),
-            pmod(col("user_id"), lit(2)).as("grp"))
-        val byVal = ev.groupBy(col("v"))
-          .agg(sum(when(col("grp") === 0, 1L).otherwise(0L)).as("ca"),
-            sum(when(col("grp") === 1, 1L).otherwise(0L)).as("t"))
-        // cum = arm-B count strictly below v (bucketedCum sums `t`)
-        val ranked = RankSum.bucketedCum(byVal)
-        val nb = byVal.agg(sum(col("t")).as("n_b"))
+        val byVal = RankSum.armCensus(t(s, d, "events"))
+        // cum = arm-B count strictly below v
+        val ranked = RankSum.prefixSums(byVal, col("v"),
+          Seq(col("tb") -> "cum"), col("v"))
+        val nb = byVal.agg(sum(col("tb")).as("n_b"))
         ranked.join(broadcast(nb))
-          .agg(sum(col("ca")).as("n_a"), max(col("n_b")).as("n_b"),
-            sum(col("ca") * col("cum")).as("n_gt"),
-            sum(col("ca") * (col("n_b") - col("cum") - col("t")))
+          .agg(sum(col("ta")).as("n_a"), max(col("n_b")).as("n_b"),
+            sum(col("ta") * col("cum")).as("n_gt"),
+            sum(col("ta") * (col("n_b") - col("cum") - col("tb")))
               .as("n_lt"),
-            sum(col("ca") * col("t")).as("n_eq"))
+            sum(col("ta") * col("tb")).as("n_eq"))
           .withColumn("delta",
             when(col("n_a") > 0L && col("n_b") > 0L,
               round((col("n_gt") - col("n_lt")).cast("double") /

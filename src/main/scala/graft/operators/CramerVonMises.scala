@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import Q._
@@ -23,7 +22,7 @@ import Q._
   * Σⱼ₌₁..t (D−2j)² = t·D² − 2D·t(t+1) + (2/3)·t(t+1)(2t+1) with
   * D = (2·cumAll + t_all + 1) − 2·cumOwn — every symbol an exact
   * long from the two-level bucketed prefix swap (shared
-  * [[RankSum.withRangeBucket]], the q268 machinery with a combined
+  * [[RankSum.prefixSums]], the q268 machinery with a combined
   * lane), evaluated as ONE double tree per row and summed as
   * DECIMAL(38,6) lanes. Empty arm → NULL. Significance at Anderson's
   * asymptotic 5 % point 0.461.
@@ -46,32 +45,10 @@ object CramerVonMises {
   val q269 = GraftQuery(
     "q269_cramer_von_mises", {
       (s, d) => {
-        val obs = t(s, d, "events")
-          .select(col("value").as("v"),
-            pmod(col("user_id"), lit(2L)).as("g"))
-        val byVal = obs.groupBy(col("v"))
-          .agg(sum(when(col("g") === 0L, 1L).otherwise(0L)).as("ta"),
-            sum(when(col("g") === 1L, 1L).otherwise(0L)).as("tb"),
-            count(lit(1)).as("t"))
-        val bucketed = RankSum.withRangeBucket(byVal, col("v"))
-        val wb = Window.orderBy(col("bkt"))
-          .rowsBetween(Window.unboundedPreceding, -1)
-        val offsets = bucketed.groupBy(col("bkt"))
-          .agg(sum(col("ta")).as("bta"), sum(col("tb")).as("btb"),
-            sum(col("t")).as("btt"))
-          .select(col("bkt"),
-            coalesce(sum(col("bta")).over(wb), lit(0L)).as("offa"),
-            coalesce(sum(col("btb")).over(wb), lit(0L)).as("offb"),
-            coalesce(sum(col("btt")).over(wb), lit(0L)).as("offt"))
-        val wv = Window.partitionBy(col("bkt")).orderBy(col("v"))
-          .rowsBetween(Window.unboundedPreceding, -1)
-        val cums = bucketed.join(broadcast(offsets), "bkt")
-          .withColumn("ca",
-            col("offa") + coalesce(sum(col("ta")).over(wv), lit(0L)))
-          .withColumn("cb",
-            col("offb") + coalesce(sum(col("tb")).over(wv), lit(0L)))
-          .withColumn("ctot",
-            col("offt") + coalesce(sum(col("t")).over(wv), lit(0L)))
+        val byVal = RankSum.armCensus(t(s, d, "events"))
+        val cums = RankSum.prefixSums(byVal, col("v"),
+          Seq(col("ta") -> "ca", col("tb") -> "cb", col("t") -> "ctot"),
+          col("v"))
         def blockSum4(tg: org.apache.spark.sql.Column,
             cOwn: org.apache.spark.sql.Column) = {
           val dd = (lit(2L) * col("ctot") + col("t") + 1L -

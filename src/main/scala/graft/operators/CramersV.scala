@@ -15,10 +15,11 @@ import Q._
   * day-of-week) — X217's banded-effect-size idea applied to the
   * categorical tier.
   *
-  * Determinism: the q162 recipe verbatim — exact integer grid
-  * (zero cells included via the cross join), per-cell deviation one
-  * shared double tree, the cross-cell χ² sum as DECIMAL(30,14)
-  * (associative), then V is one sqrt over (χ², N, min(r,c)) leaves.
+  * Determinism: the q162 grid ([[ChiSquareDrift.cellGrid]]) — exact
+  * integer cells (zero cells included via the cross join), per-cell
+  * deviation one shared double tree, the cross-cell χ² sum as
+  * DECIMAL(30,14) (associative), then V is one sqrt over (χ², N,
+  * min(r,c)) leaves.
   * Degenerate tables (min(r,c) = 1) → NULL V.
   *
   * Scale shape: per pair, one map-side groupBy to the |A|·|B| cell
@@ -31,23 +32,7 @@ object CramersV {
     * of `pairs` (one row per observation).
     */
   private[operators] def v(pairs: DataFrame, label: String): DataFrame = {
-    val observed = pairs.groupBy(col("a"), col("b"))
-      .agg(count(lit(1)).as("obs"))
-    val cells = observed.select(col("a")).distinct()
-      .crossJoin(observed.select(col("b")).distinct())
-      .join(observed, Seq("a", "b"), "left")
-      .withColumn("obs", coalesce(col("obs"), lit(0L)))
-    val rt = cells.groupBy(col("a")).agg(sum(col("obs")).as("rt"))
-    val ct = cells.groupBy(col("b")).agg(sum(col("obs")).as("ct"))
-    val tot = cells.agg(sum(col("obs")).as("n"))
-    cells
-      .join(broadcast(rt), "a").join(broadcast(ct), "b")
-      .join(broadcast(tot))
-      .withColumn("expd", col("rt").cast("double") *
-        col("ct").cast("double") / col("n").cast("double"))
-      .withColumn("dev",
-        (col("obs").cast("double") - col("expd")) *
-          (col("obs").cast("double") - col("expd")) / col("expd"))
+    ChiSquareDrift.cellGrid(pairs, "a", "b")
       .agg(
         max(col("n")).as("n"),
         countDistinct(col("a")).as("r"),

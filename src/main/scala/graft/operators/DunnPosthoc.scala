@@ -17,7 +17,7 @@ import Q._
   *
   * Determinism: mean ranks ride the same DOUBLED midranks as q247
   * (R2_g = Σ m·(2·cum + t + 1), exact longs from the shared
-  * [[RankSum.bucketedCum]] swap); each z is ONE double tree over
+  * [[RankSum.prefixSums]] swap); each z is ONE double tree over
   * exact longs (the halving folds into the final division); the
   * Bonferroni critical value z(1 − 0.025/m) is an embedded literal
   * CASE over m = k(k−1)/2 ∈ {1,3,6,10,15,21,28} (k ≤ 8) ending in a
@@ -66,7 +66,8 @@ object DunnPosthoc {
           obs.groupBy(col("grp"), col("v")).agg(count(lit(1)).as("m")))
         val byVal = grpCensus.groupBy(col("v"))
           .agg(sum(col("m")).as("t"))
-        val ranked = RankSum.bucketedCum(byVal)
+        val ranked = RankSum.prefixSums(byVal, col("v"),
+          Seq(col("t") -> "cum"), col("v"))
           .withColumn("r2", lit(2L) * col("cum") + col("t") + 1L)
           .select(col("v"), col("r2"))
         val perGrp = graft.Checkpoints.eager(grpCensus

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import Q._
@@ -15,7 +14,7 @@ import Q._
   * whole statistic is pairwise "later group wins" counts — computed
   * here with NO pair face at all: per distinct value, the per-group
   * strictly-below cumulatives come from the q149 two-level bucketed
-  * prefix swap (shared [[RankSum.withRangeBucket]]), and J folds as
+  * prefix swap (shared [[RankSum.prefixSums]]), and J folds as
   * Σ_v Σ_{i<j} [n_j(v)·2C_i(v) + n_j(v)·n_i(v)] (ties count ½, kept
   * doubled — the q149 discipline).
   *
@@ -51,22 +50,8 @@ object JonckheereTerpstra {
             gs.map(g => sum(when(col("g") === g.toLong, 1L)
               .otherwise(0L)).as(s"n$g")).tail :+
               count(lit(1)).as("t"): _*)
-        val bucketed = RankSum.withRangeBucket(byVal, col("v"))
-        val wb = Window.orderBy(col("bkt"))
-          .rowsBetween(Window.unboundedPreceding, -1)
-        val offsets = bucketed.groupBy(col("bkt"))
-          .agg(gs.map(g => sum(col(s"n$g")).as(s"bt$g")).head,
-            gs.map(g => sum(col(s"n$g")).as(s"bt$g")).tail: _*)
-          .select(col("bkt") +: gs.map(g =>
-            coalesce(sum(col(s"bt$g")).over(wb), lit(0L))
-              .as(s"off$g")): _*)
-        val wv = Window.partitionBy(col("bkt")).orderBy(col("v"))
-          .rowsBetween(Window.unboundedPreceding, -1)
-        val cums = gs.foldLeft(
-          bucketed.join(broadcast(offsets), "bkt")) { (acc, g) =>
-          acc.withColumn(s"c$g", col(s"off$g") +
-            coalesce(sum(col(s"n$g")).over(wv), lit(0L)))
-        }
+        val cums = RankSum.prefixSums(byVal, col("v"),
+          gs.map(g => col(s"n$g") -> s"c$g"), col("v"))
         val j2row: Column = gs.flatMap(i => gs.filter(_ > i).map { j =>
           col(s"n$j") * (lit(2L) * col(s"c$i")) +
             col(s"n$j") * col(s"n$i")

@@ -22,7 +22,7 @@ import Q._
   * fixed double tree. All-values-tied (correction C = 0) → NULL.
   *
   * Scale shape: the rank machinery is q149's two-level bucketed
-  * prefix sum ([[RankSum.bucketedCum]], shared code) — no global
+  * prefix sum ([[RankSum.prefixSums]], shared code) — no global
   * single-partition window; group sums land on the |groups × values|
   * frame, the final H on a k-row frame.
   */
@@ -49,7 +49,8 @@ object KruskalWallis {
           .select(col("o_orderpriority").as("grp"),
             col("o_totalprice").cast("double").as("v"))
         val byVal = obs.groupBy(col("v")).agg(count(lit(1)).as("t"))
-        val ranked = RankSum.bucketedCum(byVal)
+        val ranked = RankSum.prefixSums(byVal, col("v"),
+          Seq(col("t") -> "cum"), col("v"))
           .withColumn("r2", lit(2L) * col("cum") + col("t") + 1L)
           .select(col("v"), col("r2"))
         val perGrp = obs.groupBy(col("grp"), col("v"))

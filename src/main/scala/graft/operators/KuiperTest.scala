@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import Q._
@@ -39,28 +38,15 @@ object KuiperTest {
   val q289 = GraftQuery(
     "q289_kuiper", {
       (s, d) => {
-        val obs = t(s, d, "events")
-          .select(col("value").as("v"),
-            pmod(col("user_id"), lit(2L)).as("g"))
-        val byVal = graft.Checkpoints.eager(obs.groupBy(col("v"))
-          .agg(sum(when(col("g") === 0L, 1L).otherwise(0L)).as("ta"),
-            sum(when(col("g") === 1L, 1L).otherwise(0L)).as("tb"),
-            count(lit(1)).as("t")))
+        val byVal = graft.Checkpoints.eager(
+          RankSum.armCensus(t(s, d, "events")))
         val totals = byVal.agg(sum(col("ta")).as("na"),
           sum(col("tb")).as("nb"))
-        val bucketed = RankSum.withRangeBucket(byVal, col("v"))
-        val wb = Window.orderBy(col("bkt"))
-          .rowsBetween(Window.unboundedPreceding, -1)
-        val offsets = bucketed.groupBy(col("bkt"))
-          .agg(sum(col("ta")).as("bta"), sum(col("tb")).as("btb"))
-          .select(col("bkt"),
-            coalesce(sum(col("bta")).over(wb), lit(0L)).as("offa"),
-            coalesce(sum(col("btb")).over(wb), lit(0L)).as("offb"))
-        val wv = Window.partitionBy(col("bkt")).orderBy(col("v"))
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        val cums = bucketed.join(broadcast(offsets), "bkt")
-          .withColumn("ma", col("offa") + sum(col("ta")).over(wv))
-          .withColumn("mb", col("offb") + sum(col("tb")).over(wv))
+        // plus-block cumulatives: the pre-block prefix + the block
+        val cums = RankSum.prefixSums(byVal, col("v"),
+          Seq(col("ta") -> "ca", col("tb") -> "cb"), col("v"))
+          .withColumn("ma", col("ca") + col("ta"))
+          .withColumn("mb", col("cb") + col("tb"))
         cums.join(broadcast(totals))
           .withColumn("gap", col("ma") * col("nb") -
             col("mb") * col("na"))

@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import Q._
@@ -20,7 +19,7 @@ import Q._
   * aggregates over the event stream); the per-time census (deaths
   * per arm, endpoints per arm) is exact longs; risk sets are
   * suffix counts derived from PREFIX sums through the two-level
-  * bucketed swap (shared [[RankSum.withRangeBucket]], the q269
+  * bucketed swap (shared [[RankSum.prefixSums]], the q269
   * multi-lane pattern — NO single-partition window); each time's
   * E/V term is one double tree and the per-time terms ride
   * DECIMAL(30,14) lanes. Ties: censored-at-t users count at risk AT
@@ -83,24 +82,12 @@ object LogRank {
     val totals = census.agg(sum(col("e0")).as("tot0"),
       sum(col("e1")).as("tot1"), sum(col("d0") + col("d1"))
         .as("n_deaths"))
-    val bucketed = RankSum.withRangeBucket(census,
-      col("v").cast("double"))
-    val wb = Window.orderBy(col("bkt"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = bucketed.groupBy(col("bkt"))
-      .agg(sum(col("e0")).as("b0"), sum(col("e1")).as("b1"))
-      .select(col("bkt"),
-        coalesce(sum(col("b0")).over(wb), lit(0L)).as("off0"),
-        coalesce(sum(col("b1")).over(wb), lit(0L)).as("off1"))
-    val wv = Window.partitionBy(col("bkt")).orderBy(col("v"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    bucketed.join(broadcast(offsets), "bkt")
+    RankSum.prefixSums(census, col("v").cast("double"),
+      Seq(col("e0") -> "pre0", col("e1") -> "pre1"), col("v"))
       .join(broadcast(totals))
       // at risk in arm g at time v: tot_g − endpoints before v
-      .withColumn("r0", col("tot0") - col("off0") -
-        coalesce(sum(col("e0")).over(wv), lit(0L)))
-      .withColumn("r1", col("tot1") - col("off1") -
-        coalesce(sum(col("e1")).over(wv), lit(0L)))
+      .withColumn("r0", col("tot0") - col("pre0"))
+      .withColumn("r1", col("tot1") - col("pre1"))
   }
 
   /** q273 — conversion-time curves, even vs odd user ids. */

@@ -25,7 +25,7 @@ import Q._
   * (group, value) census (the q240 recompute discipline — without the
   * checkpoint the census subtree re-executes per consumer); the value
   * census, grand median (two-level bucketed prefix swap, shared
-  * [[RankSum.bucketedCum]] — NO single-partition window over the
+  * [[RankSum.prefixSums]] — NO single-partition window over the
   * price frame) and the k×2 sides are all re-aggs of that census.
   */
 object MoodMedian {
@@ -44,7 +44,8 @@ object MoodMedian {
           obs.groupBy(col("grp"), col("v")).agg(count(lit(1)).as("m")))
         val byVal = grpCensus.groupBy(col("v"))
           .agg(sum(col("m")).as("t"))
-        val cum = RankSum.bucketedCum(byVal)
+        val cum = RankSum.prefixSums(byVal, col("v"),
+          Seq(col("t") -> "cum"), col("v"))
         val totals = byVal.agg(sum(col("t")).as("n"))
         // 1-row doubled-median frame, checkpointed: two broadcast
         // consumers (sides, output) would otherwise re-run the prefix

@@ -26,7 +26,7 @@ import Q._
   * Scale shape (r19 — VERDICT r18 item 1): the session cut is q35's
   * per-user window (user-hash partitioned); the sweep's global
   * running sum is the q149 two-level swap
-  * ([[RankSum.bucketedRunningSum]]) — time-bucket delta partials, a
+  * ([[RankSum.prefixSums]]) — time-bucket delta partials, a
   * ≤1025-row offsets frame broadcast back, a bucket-PARTITIONED
   * running sum — so the 2·|sessions| delta frame never funnels
   * through one partition (PlanSpec-gated); the peak pick is an
@@ -62,10 +62,10 @@ object PeakConcurrency {
             col("s1").as("at"), lit(-1L).as("delta")))
         // two-level sweep: time-bucket partials + bucket-partitioned
         // running sum; starts sort before ends at the same instant
-        val swept = RankSum.bucketedRunningSum(deltas,
-          col("at").cast("double"), col("delta"), "conc",
-          col("at"), col("delta").desc, col("user_id"),
-          col("session_id"))
+        val swept = RankSum.prefixSums(deltas, col("at").cast("double"),
+          Seq(col("delta") -> "before"), col("at"), col("delta").desc,
+          col("user_id"), col("session_id"))
+          .withColumn("conc", col("before") + col("delta"))
         // 1-row session census (broadcast), not a global count window
         val nDf = sessions.groupBy().agg(count(lit(1)).as("n_sessions"))
         swept

@@ -35,13 +35,6 @@ object RankSum {
   /** Prefix-sum buckets. */
   val Buckets = 1024
 
-  /** The two-level bucketed prefix sum, factored (r18) so X214's
-    * Kruskal–Wallis shares it verbatim: adds `cum` — the total of `t`
-    * over all strictly-smaller `v` — to a per-distinct-value frame
-    * `(v double, t long, …)` with NO global single-partition window
-    * (per-bucket totals are a ≤[[Buckets]]+1-row planning frame; the
-    * within-bucket window is partitioned by bucket).
-    */
   /** Range-bucket stage shared by every two-level prefix swap (r19):
     * adds `bkt` ∈ [0, [[Buckets]]), monotone NON-DECREASING in the
     * double column `v` — so the global order (v, ties…) equals
@@ -64,23 +57,57 @@ object RankSum {
       .drop("lo", "w")
   }
 
-  private[operators] def bucketedCum(
-      byVal: org.apache.spark.sql.DataFrame)
+  /** The two-level bucketed EXCLUSIVE prefix sum every rank and EDF
+    * test shares: for each lane `(x, name)` adds `name` — the sum of
+    * `x` over all rows strictly before this one in the total order
+    * (`order`…) — with NO global single-partition window. `v` is a
+    * monotone double projection of the order's primary key
+    * ([[withRangeBucket]]); per-bucket lane totals are cumulated on a
+    * ≤[[Buckets]]+1-row offsets frame broadcast back, and the
+    * within-bucket window is PARTITIONED by bucket. A caller that
+    * needs the inclusive prefix adds its own lane value. Null sums
+    * (an empty prefix) read 0.
+    */
+  private[operators] def prefixSums(
+      df: org.apache.spark.sql.DataFrame,
+      v: org.apache.spark.sql.Column,
+      lanes: Seq[(org.apache.spark.sql.Column, String)],
+      order: org.apache.spark.sql.Column*)
       : org.apache.spark.sql.DataFrame = {
-    val bucketed = withRangeBucket(byVal, col("v"))
+    val bucketed = withRangeBucket(df, v)
     val wb = Window.orderBy(col("bkt"))
       .rowsBetween(Window.unboundedPreceding, -1)
+    val partials = lanes.zipWithIndex.map { case ((x, _), i) =>
+      sum(x).as(s"bt_$i")
+    }
     val offsets = bucketed.groupBy(col("bkt"))
-      .agg(sum(col("t")).as("bt"))
-      .withColumn("off", coalesce(sum(col("bt")).over(wb), lit(0L)))
-      .select(col("bkt"), col("off"))
-    val wv = Window.partitionBy(col("bkt")).orderBy(col("v"))
+      .agg(partials.head, partials.tail: _*)
+      .select(col("bkt") +: lanes.indices.map(i =>
+        coalesce(sum(col(s"bt_$i")).over(wb), lit(0L)).as(s"off_$i")): _*)
+    val wv = Window.partitionBy(col("bkt")).orderBy(order: _*)
       .rowsBetween(Window.unboundedPreceding, -1)
-    bucketed
-      .join(broadcast(offsets), "bkt")
-      .withColumn("cum",
-        col("off") + coalesce(sum(col("t")).over(wv), lit(0L)))
+    lanes.zipWithIndex
+      .foldLeft(bucketed.join(broadcast(offsets), "bkt")) {
+        case (acc, ((x, name), i)) => acc.withColumn(name,
+          col(s"off_$i") + coalesce(sum(x).over(wv), lit(0L)))
+      }
+      .drop("bkt" +: lanes.indices.map(i => s"off_$i"): _*)
   }
+
+  /** Per distinct `events.value` `v`: the even-user arm count `ta`,
+    * the odd-user arm count `tb` and the tie total `t` — the census
+    * the two-sample rank and EDF tests over the user-parity arms
+    * share. Lazy: a caller whose census feeds several consumers
+    * materializes it eagerly itself.
+    */
+  private[operators] def armCensus(events: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame =
+    events
+      .select(col("value").as("v"), pmod(col("user_id"), lit(2L)).as("g"))
+      .groupBy(col("v"))
+      .agg(sum(when(col("g") === 0L, 1L).otherwise(0L)).as("ta"),
+        sum(when(col("g") === 1L, 1L).otherwise(0L)).as("tb"),
+        count(lit(1)).as("t"))
 
   /** Global 1-based row_number over the total order (`order`…) with NO
     * single-partition window (VERDICT r18 item 1): per-bucket counts →
@@ -155,29 +182,6 @@ object RankSum {
     ranked.drop(specs.indices.map(i => s"bkt_$i"): _*)
   }
 
-  /** Global INCLUSIVE running sum of `t` over the total order
-    * (`order`…), same two-level shape as [[bucketedRowNumber]] — the
-    * sweep-line form (q198). Adds `outName` (long).
-    */
-  private[operators] def bucketedRunningSum(
-      df: org.apache.spark.sql.DataFrame,
-      v: org.apache.spark.sql.Column,
-      t: org.apache.spark.sql.Column, outName: String,
-      order: org.apache.spark.sql.Column*)
-      : org.apache.spark.sql.DataFrame = {
-    val bucketed = withRangeBucket(df, v)
-    val wb = Window.orderBy(col("bkt"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = bucketed.groupBy(col("bkt")).agg(sum(t).as("bt"))
-      .withColumn("off", coalesce(sum(col("bt")).over(wb), lit(0L)))
-      .select(col("bkt"), col("off"))
-    val wv = Window.partitionBy(col("bkt")).orderBy(order: _*)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    bucketed.join(broadcast(offsets), "bkt")
-      .withColumn(outName, col("off") + sum(t).over(wv))
-      .drop("bkt", "off")
-  }
-
   /** SQL-standard NTILE(`k`) from a 1-based global row number and the
     * total count (both longs): the first n mod k tiles get ⌈n/k⌉
     * rows — the exact bucket rule Spark and DuckDB share. Pure
@@ -207,20 +211,16 @@ object RankSum {
   val q149 = GraftQuery(
     "q149_rank_sum_test", {
       (s, d) => {
-        val ev = t(s, d, "events")
-          .select(col("value").as("v"),
-            pmod(col("user_id"), lit(2)).as("grp"))
-        // per distinct value: total ties t and arm-A count
-        val byVal = ev.groupBy(col("v"))
-          .agg(count(lit(1)).as("t"),
-            sum(when(col("grp") === 0, 1L).otherwise(0L)).as("na_v"))
-        // two-level prefix sum over value order (shared with X214)
-        val ranked = bucketedCum(byVal)
+        // per distinct value: total ties t and arm-A count ta
+        val byVal = armCensus(t(s, d, "events"))
+        // two-level prefix sum over value order
+        val ranked = prefixSums(byVal, col("v"),
+          Seq(col("t") -> "cum"), col("v"))
           // doubled average rank of this value's tie block — integer
           .withColumn("r2", lit(2L) * col("cum") + col("t") + 1L)
         val agg = ranked.agg(
-          sum(col("na_v")).as("n_a"), sum(col("t")).as("n"),
-          sum(col("na_v") * col("r2")).as("rs2a"),
+          sum(col("ta")).as("n_a"), sum(col("t")).as("n"),
+          sum(col("ta") * col("r2")).as("rs2a"),
           sum(col("t") * col("t") * col("t") - col("t")).as("ties3"))
         agg
           .withColumn("n_b", col("n") - col("n_a"))

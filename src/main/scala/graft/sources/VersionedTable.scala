@@ -156,21 +156,25 @@ object VersionedTable {
         true
       } catch { case _: java.io.IOException => false }
     if (!tryAcquire()) {
-      val ageMs = try {
-        System.currentTimeMillis() - f.getFileStatus(lock)
-          .getModificationTime
-      } catch { case _: Throwable => Long.MaxValue }
-      if (ageMs < LockStaleMs)
-        throw new ConcurrentWriteException(
-          s"another writer holds $lock (age ${ageMs} ms) — this table " +
-            "is single-writer; a second pipeline pointed at the same " +
-            "root must not commit")
-      System.err.println(s"[versioned-table] breaking stale writer " +
-        s"lock at $lock (age ${ageMs} ms > $LockStaleMs)")
-      f.delete(lock, false)
+      // only a lock that vanished since the create (its holder
+      // released it) is "gone"; any other stat failure propagates —
+      // a writer's lease is never broken on a failed stat
+      val ageMs = try Some(System.currentTimeMillis() -
+          f.getFileStatus(lock).getModificationTime)
+        catch { case _: java.io.FileNotFoundException => None }
+      ageMs.foreach { age =>
+        if (age < LockStaleMs)
+          throw new ConcurrentWriteException(
+            s"another writer holds $lock (age ${age} ms) — this table " +
+              "is single-writer; a second pipeline pointed at the same " +
+              "root must not commit")
+        System.err.println(s"[versioned-table] breaking stale writer " +
+          s"lock at $lock (age ${age} ms > $LockStaleMs)")
+        f.delete(lock, false)
+      }
       if (!tryAcquire())
         throw new ConcurrentWriteException(
-          s"lost the race re-acquiring $lock after breaking it")
+          s"lost the race re-acquiring $lock")
     }
     try body
     finally f.delete(lock, false)

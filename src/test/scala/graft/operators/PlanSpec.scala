@@ -652,6 +652,60 @@ class PlanSpec extends SparkSpec {
     assert(!plan.contains("CartesianProduct"))
   }
 
+  /** The AQE-flattened nodes of EVERY plan `q` executes — the
+    * checkpoints its build runs eagerly, then the final collect: a
+    * window inside an eagerly materialized frame shows only in its
+    * checkpoint's plan.
+    */
+  private def allExecutedNodes(q: GraftQuery)
+      : Seq[org.apache.spark.sql.execution.SparkPlan] = {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.execution.QueryExecution
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        seen.add(qe)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val df = q.build(spark, sf0001)
+      df.collect()
+      // listener events arrive asynchronously but in order, so once
+      // the collect's own event is in, every checkpoint's is too
+      val last = df.asInstanceOf[ClassicDataset[_]].queryExecution
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (!seen.asScala.exists(_ eq last) &&
+          System.nanoTime() < deadline) Thread.sleep(20)
+      assert(seen.asScala.exists(_ eq last),
+        s"${q.name}: the collect never reached the listener")
+      seen.asScala.toSeq.flatMap(qe => deepNodes(qe.executedPlan))
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("prefix-sum kernel callers: the corpus-sized window is " +
+      "PARTITIONED by bucket; only the bucket-offsets window is global") {
+    import org.apache.spark.sql.execution.window.WindowExec
+    def onBkt(e: org.apache.spark.sql.catalyst.expressions.Expression) =
+      e.references.exists(_.name == "bkt")
+    val callers = Seq(RankSum.q149, PeakConcurrency.q198,
+      KruskalWallis.q247, CliffsDelta.q250, JonckheereTerpstra.q268,
+      CramerVonMises.q269, MoodMedian.q271, DunnPosthoc.q272,
+      LogRank.q273, AndersonDarling.q278, AnsariBradley.q286,
+      KaplanMeier.q287, KuiperTest.q289, BrunnerMunzel.q290)
+    callers.foreach { q =>
+      val windows = allExecutedNodes(q).collect { case w: WindowExec => w }
+      assert(windows.exists(_.partitionSpec.exists(onBkt)),
+        s"${q.name}: no bucket-partitioned prefix window:\n" +
+          windows.mkString("\n").take(3000))
+      windows.filter(_.partitionSpec.isEmpty).foreach { w =>
+        assert(w.orderSpec.exists(onBkt),
+          s"${q.name}: global window off the offsets frame:\n" +
+            w.toString.take(1200))
+      }
+    }
+  }
+
   test("q150 correlation matrix: ONE lineitem scan feeds all pairs " +
       "(a per-pair agg would re-scan |pairs| times) and no EXPAND") {
     val plan = planOf(CorrelationMatrix.q150.build(spark, sf0001))
@@ -741,9 +795,9 @@ class PlanSpec extends SparkSpec {
     } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
   }
 
-  /** r17 batch shape guardrails, pinned from the ProfileR17Plans
-    * census (measured counts, then asserted as BOUNDS so AQE stage
-    * fusion can only improve them).
+  /** r17 batch shape guardrails, pinned from the exchange census
+    * measured at sf0.001 in r17 (measured counts, then asserted as
+    * BOUNDS so AQE stage fusion can only improve them).
     */
   test("r17 monitoring tier (q233/q234/q238): at most three " +
       "exchanges — the hourly/daily census, the per-type window, the " +
@@ -863,7 +917,7 @@ class PlanSpec extends SparkSpec {
 
   test("r19 late statistics tier (q270-q281): exchange counts stay " +
       "at the measured census and nothing leaves codegen") {
-    // measured at sf0.001 (ProfileR19Plans) AFTER the census-eager
+    // measured at sf0.001 in r19 AFTER the census-eager
     // rewrites: the one-agg battery (q279) takes one exchange; the
     // checkpoint-fed grids (q270-q272) four; the hourly-series trio
     // and Bowker ride |types × hours| / k² frames (3-5); the

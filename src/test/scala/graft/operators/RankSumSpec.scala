@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -73,5 +74,47 @@ class RankSumSpec extends AnyFunSuite with SparkSpec {
     val (_, _, u2a, z) = run(rows)
     assert(u2a === bruteU2A(rows))
     assert(!z.isNaN)
+  }
+
+  /** [[RankSum.prefixSums]] against the brute single-partition window
+    * over the same total order (k, id), three lanes at once; also
+    * pins that no bucket/offset column leaks into the output.
+    */
+  private def assertKernelMatches(rows: Seq[(Long, Double, Long, Long, Long)]) = {
+    val df = rows.toDF("id", "k", "x", "y", "z")
+    val lanes = Seq(col("x") -> "cx", col("y") -> "cy", col("z") -> "cz")
+    val order = Seq(col("k"), col("id"))
+    val got = RankSum.prefixSums(df, col("k"), lanes, order: _*)
+    val w = Window.orderBy(order: _*)
+      .rowsBetween(Window.unboundedPreceding, -1)
+    val want = lanes.foldLeft(df) { case (acc, (x, name)) =>
+      acc.withColumn(name, coalesce(sum(x).over(w), lit(0L)))
+    }
+    assert(got.columns.toSeq === want.columns.toSeq)
+    def sorted(d: org.apache.spark.sql.DataFrame) =
+      d.collect().toSeq.sortBy(_.getLong(0))
+    assert(sorted(got) === sorted(want))
+  }
+
+  test("prefixSums ≡ a single-partition Window.orderBy reference: " +
+      "ties, one distinct value, >1024 values over many buckets, three " +
+      "lanes, an empty frame") {
+    // heavy ties: 7 keys, tie-broken by id within the bucket window;
+    // signed lanes (the q198 ±1 deltas)
+    assertKernelMatches((0 until 300).map(i =>
+      (i.toLong, (i * 11 % 7).toDouble, (i % 3 - 1).toLong, 1L, i.toLong)))
+    // one distinct value: zero span, a single bucket
+    assertKernelMatches((0 until 50).map(i =>
+      (i.toLong, 4.5d, i.toLong, (i % 2).toLong, -1L)))
+    // 3000 distinct keys, uneven spacing: hundreds of buckets
+    val wide = (0 until 3000).map(i =>
+      (i.toLong, math.pow(i.toDouble, 1.5) - 7000d, (i % 5).toLong,
+        (i % 11 - 5).toLong, (i / 3).toLong))
+    val buckets = RankSum.withRangeBucket(
+      wide.toDF("id", "k", "x", "y", "z"), col("k"))
+      .select(col("bkt")).distinct().count()
+    assert(buckets > 500, s"planted keys landed in only $buckets buckets")
+    assertKernelMatches(wide)
+    assertKernelMatches(Seq.empty)
   }
 }

@@ -127,6 +127,29 @@ class VersionedTableSpec extends AnyFunSuite with SparkSpec {
     assert(idsOf(VersionedTable.read(spark, root)) === (0L until 15L))
   }
 
+  test("writer lease: a stat of a HELD lock that fails with anything " +
+      "but FileNotFound propagates and breaks no lease") {
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.statfail.impl", classOf[StatFailingFileSystem].getName)
+    conf.setBoolean("fs.statfail.impl.disable.cache", true)
+    try {
+      val dir = tmpDir("vt-statfail")
+      // a live writer's fresh lease
+      val lock = java.nio.file.Paths.get(dir, "_writer.lock")
+      java.nio.file.Files.writeString(lock, "live-writer")
+      val err = intercept[java.io.IOException] {
+        VersionedTable.append(rows(0, 5), s"statfail://$dir")
+      }
+      assert(err.getMessage.contains("injected"), err.getMessage)
+      assert(java.nio.file.Files.exists(lock) &&
+        java.nio.file.Files.readString(lock) == "live-writer",
+        "the held lease must survive a failed stat")
+    } finally {
+      conf.unset("fs.statfail.impl")
+      conf.unset("fs.statfail.impl.disable.cache")
+    }
+  }
+
   test("OPTIMIZE ZORDER: a versioned rewrite clustered on (partkey, " +
       "orderkey) preserves the data exactly, leaves pinned readers on " +
       "the old layout, and gives files compact second-column spans a " +
@@ -273,4 +296,19 @@ class VersionedTableSpec extends AnyFunSuite with SparkSpec {
       VersionedTable.read(spark, root, 1).collect()
     }
   }
+}
+
+/** The local filesystem under its own `statfail` scheme, whose
+  * `getFileStatus` on the writer lock fails with a plain IOException —
+  * a flaky stat (an RPC timeout, a permission glitch) of a lock a live
+  * writer holds.
+  */
+class StatFailingFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("statfail:///")
+  override def getScheme: String = "statfail"
+  override def getFileStatus(p: org.apache.hadoop.fs.Path)
+      : org.apache.hadoop.fs.FileStatus =
+    if (p.getName == "_writer.lock")
+      throw new java.io.IOException(s"injected stat failure on $p")
+    else super.getFileStatus(p)
 }
