@@ -1,5 +1,7 @@
 package graft.streaming
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
@@ -58,26 +60,36 @@ object AbsaPipeline {
   }
 
   /** S15+S16+S20/S22+S24: normalize, score all 8 aspects, stamp version.
-    * Null reviews are scored as empty text (reference fillna("")).
+    * Null reviews are scored as empty text (reference fillna("")). Two
+    * projections: the normalized text, then every aspect column in one
+    * `select`. Each `withColumn` re-analyses the whole plan, and the
+    * sink scores every micro-batch afresh.
     */
   def score(parsed: DataFrame, modelVersion: String): DataFrame = {
-    val withNorm = parsed
-      .withColumn("review_text", coalesce(col("review"), lit("")))
+    val kept = parsed.columns.toSeq.filterNot(_ == "review").map(col)
+    val text = coalesce(col("review"), lit(""))
+    val withNorm = parsed.select(kept ++ Seq(text.as("review_text"),
       // faithful Vietnamese-aware normalization (S15)
-      .withColumn("norm", MockScorers.normalizeVi(col("review_text")))
-    MockScorers.aspects.zipWithIndex
-      .foldLeft(withNorm) { case (df, (a, i)) =>
-        df.withColumn(s"${a}_pred", MockScorers.aspectPred(col("norm"), i))
-      }
-      .withColumn("model_version", lit(modelVersion))
-      .drop("norm", "review")
+      MockScorers.normalizeVi(text).as("norm")): _*)
+    val preds = MockScorers.aspects.zipWithIndex.map { case (a, i) =>
+      MockScorers.aspectPred(col("norm"), i).as(s"${a}_pred")
+    }
+    withNorm.select((kept :+ col("review_text")) ++ preds :+
+      lit(modelVersion).as("model_version"): _*)
   }
 
   /** Sink stage (S5/S6/S31): per micro-batch, re-score with the provider's
     * current version (hot reload checked once per batch) and append to the
-    * primary sink; on failure, degrade to a console/log dump instead of
-    * failing the query. `writePrimary` stands in for the JDBC append —
-    * parquet in tests, `DataFrameWriter.jdbc` in production wiring.
+    * primary sink; on a non-fatal failure, degrade to a console/log dump
+    * instead of failing the query. A fatal error (out of memory, a missing
+    * class, an interrupt) is not a sink outage: it ends the query.
+    * `writePrimary` stands in for the JDBC append — parquet in tests,
+    * `DataFrameWriter.jdbc` in production wiring.
+    *
+    * S26: an empty micro-batch is a zero-row append, so it adds no rows
+    * (a first-ever empty batch creates the JDBC table with the scored
+    * schema). The reference counts before writing; here that count would
+    * be a second Spark job over the source on every batch.
     */
   def sink(parsed: DataFrame, provider: ScorerProvider,
       writePrimary: (DataFrame, Long) => Unit,
@@ -90,14 +102,10 @@ object AbsaPipeline {
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // S26: empty-batch gate (reference counts before writing)
-        if (!batch.isEmpty) {
-          val version = provider.reloadIfUpdated()
-          val scored = score(batch, version)
-          try writePrimary(scored, batchId)
-          catch {
-            case e: Throwable => onFallback(scored, batchId, e)
-          }
+        val scored = score(batch, provider.reloadIfUpdated())
+        try writePrimary(scored, batchId)
+        catch {
+          case NonFatal(e) => onFallback(scored, batchId, e)
         }
       }
 

@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.util.concurrent.ConcurrentLinkedQueue
-
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQueryListener
 import org.apache.spark.sql.streaming.StreamingQueryListener.{QueryIdleEvent, QueryProgressEvent, QueryStartedEvent, QueryTerminatedEvent}
@@ -14,6 +12,9 @@ import org.apache.spark.sql.streaming.StreamingQueryListener.{QueryIdleEvent, Qu
   * Collects per-batch progress (rows, duration, input rate) and exposes
   * staleness: how long since the last progress event — the signal the
   * reference's monitor derived from checkpoint file mtimes.
+  *
+  * Memory stays bounded however long the stream runs: it keeps the last
+  * [[QueryMonitor.Capacity]] batches and running totals over all of them.
   */
 final class QueryMonitor extends StreamingQueryListener {
 
@@ -22,7 +23,11 @@ final class QueryMonitor extends StreamingQueryListener {
       durationMs: Long, timestamp: Long,
       droppedByWatermark: Long = 0L)
 
-  private val progress = new ConcurrentLinkedQueue[BatchProgress]()
+  // ring of the most recent batches, oldest overwritten; guarded by `this`
+  private val ring = new Array[BatchProgress](QueryMonitor.Capacity)
+  private var seen = 0L
+  private var rows = 0L
+  private var dropped = 0L
   @volatile private var lastEventAt: Long = System.currentTimeMillis()
   @volatile private var terminated: Option[String] = None
 
@@ -33,7 +38,7 @@ final class QueryMonitor extends StreamingQueryListener {
   override def onQueryProgress(event: QueryProgressEvent): Unit = {
     val p = event.progress
     lastEventAt = System.currentTimeMillis()
-    progress.add(BatchProgress(
+    record(BatchProgress(
       Option(p.name).getOrElse(p.id.toString), p.batchId, p.numInputRows,
       p.processedRowsPerSecond,
       Option(p.durationMs.get("triggerExecution")).map(_.longValue()).getOrElse(0L),
@@ -45,6 +50,13 @@ final class QueryMonitor extends StreamingQueryListener {
       p.stateOperators.map(_.numRowsDroppedByWatermark).sum))
   }
 
+  private[streaming] def record(b: BatchProgress): Unit = synchronized {
+    ring((seen % ring.length).toInt) = b
+    seen += 1
+    rows += b.numInputRows
+    dropped += b.droppedByWatermark
+  }
+
   override def onQueryTerminated(event: QueryTerminatedEvent): Unit = {
     terminated = Some(event.exception.getOrElse("clean"))
   }
@@ -53,18 +65,24 @@ final class QueryMonitor extends StreamingQueryListener {
     lastEventAt = System.currentTimeMillis()
   }
 
-  def batches: Seq[BatchProgress] = {
-    import scala.jdk.CollectionConverters._
-    progress.iterator().asScala.toSeq
+  /** The most recent batches (at most [[QueryMonitor.Capacity]]), oldest
+    * first.
+    */
+  def batches: Seq[BatchProgress] = synchronized {
+    val n = math.min(seen, ring.length.toLong)
+    (seen - n until seen).map(i => ring((i % ring.length).toInt))
   }
 
-  def totalRows: Long = batches.map(_.numInputRows).sum
+  /** Input rows across every observed batch, including those the ring
+    * no longer holds.
+    */
+  def totalRows: Long = synchronized(rows)
 
   /** Total rows dropped by watermark across every observed batch — a
     * lateness audit a production deploy alerts on (a rising count means
     * the watermark is tighter than the source's real disorder).
     */
-  def totalDroppedByWatermark: Long = batches.map(_.droppedByWatermark).sum
+  def totalDroppedByWatermark: Long = synchronized(dropped)
 
   /** ms since the stream last showed signs of life. */
   def stalenessMs: Long = System.currentTimeMillis() - lastEventAt
@@ -81,4 +99,11 @@ final class QueryMonitor extends StreamingQueryListener {
   }
 
   def detach(spark: SparkSession): Unit = spark.streams.removeListener(this)
+}
+
+object QueryMonitor {
+  /** Batches kept for [[QueryMonitor.batches]]: over an hour of a
+    * 5 s-trigger stream, a few hundred bytes each.
+    */
+  val Capacity = 1024
 }

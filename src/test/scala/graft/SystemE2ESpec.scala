@@ -12,11 +12,11 @@ import graft.streaming._
 /** The reference system's whole lifecycle (SURVEY §3.1) in one test:
   * labeled CSV corpus (S2) → rate-limited replay producer (S3) → Kafka
   * value serialization (S8) → parse (S10/S11) → normalize + score
-  * (S15/S20-S22) → versioned sink with empty-batch gate (S5/S6/S24/S26)
-  * under the supervisor (S30) → dashboard aspect-sentiment histogram
-  * (D2) over the sink. Every stage is the engine's own operator — the
-  * only stand-ins are MemoryStream-free: the replay source drives a real
-  * rate stream.
+  * (S15/S20-S22) → versioned sink, where an empty micro-batch is a
+  * zero-row append (S5/S6/S24/S26), under the supervisor (S30) →
+  * dashboard aspect-sentiment histogram (D2) over the sink. Every stage
+  * is the engine's own operator — the only stand-ins are MemoryStream-
+  * free: the replay source drives a real rate stream.
   */
 class SystemE2ESpec extends SparkSpec {
 

@@ -5,7 +5,7 @@ import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQueryException, Trigger}
 
 import graft.SparkSpec
 import graft.functions.MockScorers
@@ -91,6 +91,85 @@ class AbsaPipelineSpec extends SparkSpec {
       .start()
     q.awaitTermination(60000)
     assert(fallbacks.get() === 1)
+  }
+
+  test("fatal error in the primary sink ends the query, no fallback") {
+    val input = MemoryStream[String](spark)
+    val artifact = java.nio.file.Paths.get(tmpDir("absa-fatal-model"), "model.bin")
+    java.nio.file.Files.writeString(artifact, "weights")
+    val fallbacks = new AtomicInteger(0)
+    input.addData(reviewJson(11, "ok"))
+    val q = AbsaPipeline
+      .sink(AbsaPipeline.parse(input.toDF()), new ScorerProvider(artifact),
+        writePrimary = (_, _) => throw new NoClassDefFoundError("jdbc/Driver"),
+        onFallback = (_, _, _) => fallbacks.incrementAndGet(),
+        checkpointDir = tmpDir("absa-fatal-ckpt"),
+        trigger = Trigger.AvailableNow())
+      .start()
+    val e = intercept[StreamingQueryException](q.awaitTermination(60000))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(_.isInstanceOf[NoClassDefFoundError]), e.toString)
+    assert(fallbacks.get() === 0)
+  }
+
+  /** Runs `batches` through [[AbsaPipeline.sink]], one micro-batch each,
+    * and returns the row count of every primary write plus the fallbacks.
+    */
+  private def sinkBatches(name: String, batches: Seq[Seq[String]])
+      : (Seq[Long], Int) = {
+    val input = MemoryStream[String](spark)
+    val artifact = java.nio.file.Paths.get(tmpDir(s"$name-model"), "model.bin")
+    java.nio.file.Files.writeString(artifact, "weights")
+    val out = tmpDir(s"$name-out")
+    val written = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    val fallbacks = new AtomicInteger(0)
+    val q = AbsaPipeline
+      .sink(AbsaPipeline.parse(input.toDF()), new ScorerProvider(artifact),
+        writePrimary = (df, _) => {
+          df.write.mode("append").parquet(out)
+          written.add(spark.read.parquet(out).count())
+        },
+        onFallback = (_, _, _) => fallbacks.incrementAndGet(),
+        checkpointDir = tmpDir(s"$name-ckpt"),
+        trigger = Trigger.ProcessingTime(0))
+      .queryName(name)
+      .start()
+    try batches.foreach { b =>
+      input.addData(b)
+      q.processAllAvailable()
+    } finally q.stop()
+    import scala.jdk.CollectionConverters._
+    val totals = written.asScala.toSeq
+    (totals.zip(0L +: totals).map { case (t, prev) => t - prev },
+      fallbacks.get())
+  }
+
+  test("S26: an empty micro-batch is a zero-row append, no fallback") {
+    val (perBatch, fallbacks) = sinkBatches("absa_empty", Seq(
+      Seq(reviewJson(20, "mot"), reviewJson(21, "hai")),
+      Seq(),
+      Seq(reviewJson(22, "ba"))))
+    assert(perBatch === Seq(2L, 0L, 1L))
+    assert(fallbacks === 0)
+  }
+
+  test("QueryMonitor.totalRows equals the rows sent through the sink") {
+    val monitor = new QueryMonitor().attach(spark)
+    try {
+      val batches = (0 until 5).map(b =>
+        (0 until 3 + b).map(i => reviewJson(100 * b + i, s"review $b $i")))
+      val (perBatch, fallbacks) = sinkBatches("absa_rows", batches)
+      assert(perBatch === batches.map(_.size.toLong))
+      assert(fallbacks === 0)
+      // listener events are async: wait for the last batch's progress
+      val deadline = System.currentTimeMillis() + 10000
+      def seen = monitor.batches.filter(_.queryName == "absa_rows")
+      while (System.currentTimeMillis() < deadline &&
+          !seen.exists(_.batchId == batches.size - 1))
+        Thread.sleep(50)
+      assert(batches.indices.forall(id => seen.exists(_.batchId == id)))
+      assert(monitor.totalRows === batches.map(_.size).sum.toLong)
+    } finally monitor.detach(spark)
   }
 
   test("hot reload: artifact touch swaps model_version between batches (S24)") {

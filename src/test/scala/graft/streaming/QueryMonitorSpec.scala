@@ -28,4 +28,19 @@ class QueryMonitorSpec extends SparkSpec {
       assert(monitor.stalenessMs < 60000)
     } finally monitor.detach(spark)
   }
+
+  test("ring keeps the last Capacity batches; totals count every batch") {
+    val monitor = new QueryMonitor
+    val n = QueryMonitor.Capacity + 300
+    (0 until n).foreach { i =>
+      monitor.record(monitor.BatchProgress("ring", i.toLong, numInputRows = 2,
+        processedRowsPerSecond = 1.0, durationMs = 5, timestamp = i.toLong,
+        droppedByWatermark = i % 2))
+    }
+    assert(monitor.batches.size === QueryMonitor.Capacity)
+    assert(monitor.batches.map(_.batchId) ===
+      (n - QueryMonitor.Capacity until n).map(_.toLong))
+    assert(monitor.totalRows === 2L * n)
+    assert(monitor.totalDroppedByWatermark === (0 until n).map(_ % 2).sum.toLong)
+  }
 }
