@@ -22,12 +22,12 @@ import Q._
   * The maintained form rides X98's swap/marker/recovery machinery via
   * `mergeOnceAs`: state is ONE row per key — (last change struct,
   * additive change count) — and the combine is max(struct) + sum, both
-  * COMMUTATIVE and ASSOCIATIVE, so unlike X123's in-order contract
-  * this merge is exact under ARBITRARY batch slicing (the spec proves
-  * modular and chronological slicings both reproduce the batch
-  * oracle bit-for-bit). Per-batch cost is |keys-touched|-sized, never
-  * a rescan; at 100 TB the snapshot maintenance is one keyed shuffle
-  * of the delta against |users| state rows.
+  * COMMUTATIVE and ASSOCIATIVE, so this merge is exact under
+  * ARBITRARY batch slicing (the spec proves modular and chronological
+  * slicings both reproduce the batch oracle bit-for-bit). Per-batch
+  * cost is |keys-touched|-sized, never a rescan; at 100 TB the
+  * snapshot maintenance is one keyed shuffle of the delta against
+  * |users| state rows.
   *
   * The CDC feed here derives from `events`: `error` records are the
   * delete stream, everything else upserts (value, k-prop); time is

@@ -27,8 +27,8 @@ import graft.functions.MockScorers.{normalize, normalizeSql}
   */
 object Chao1Richness {
 
-  /** (source, w) → per-(source, token) counts — the mergeable frame
-    * [[graft.streaming.RichnessStream]] maintains as its state.
+  /** (source, w) → per-(source, token) counts: the first, map-side
+    * combined aggregation of q253.
     */
   def tokenCounts(docs: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame =
@@ -39,9 +39,8 @@ object Chao1Richness {
       .groupBy(col("source"), col("w"))
       .agg(count(lit(1)).as("c"))
 
-  /** The census + estimates over a (source, w, c) count frame — ONE
-    * tree shared by q253 and the streaming read so the two cannot
-    * drift.
+  /** The census + estimates over a (source, w, c) count frame: the
+    * count-of-counts collapse to one row per source.
     */
   def census(counts: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame =

@@ -36,9 +36,8 @@ object DebounceAudit {
   def audit(events: DataFrame): DataFrame = {
     val byKey = Window.partitionBy(col("user_id"), col("event_type"))
       .orderBy(col("ts"), col("event_id"))
-    // Integer-microsecond gap test — the SAME predicate DebounceStream
-    // applies per batch, so the batch≡stream slicing contract cannot
-    // drift on float rounding (one shared binade-free comparison).
+    // Integer-microsecond gap test: exact on both engines, with no
+    // float rounding at the 5 s boundary.
     val flagged = events
       .withColumn("us", unix_micros(col("ts")))
       .withColumn("bounce",

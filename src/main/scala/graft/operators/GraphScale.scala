@@ -7,7 +7,7 @@ import org.apache.spark.sql.SparkSession
   * The r15 SCALE.md adjudication blamed q168/q175's super-linear
   * second-decade exponents (1.27/1.32) on per-partition sort and
   * checkpoint volume under the session's fixed 32 shuffle partitions,
-  * without running the experiment. r16 ran it (ProfileGraphParts, sf10
+  * without running the experiment. r16 ran it (a partition sweep, sf10
   * replica corpus, 60M lineitem → ~240M directed co-purchase edges):
   *
   *   q175 sf10  parts=32: 371.5 s   parts=128: 193.2 s   parts=256: 292.1 s
@@ -27,10 +27,10 @@ import org.apache.spark.sql.SparkSession
   * on this host. On a real cluster the same rule reads "size shuffle
   * partitions from the edge-frame estimate, not the executor count".
   *
-  * The conf is scoped per query by the HARNESSES: Bench/Verify and the
-  * decade probes reset `spark.sql.shuffle.partitions` to the session
-  * default before each query build, so a graph query's scaling never
-  * leaks into the next query's plan.
+  * The conf is scoped per query by the HARNESSES: Bench and Verify
+  * reset `spark.sql.shuffle.partitions` to the session default before
+  * each query build, so a graph query's scaling never leaks into the
+  * next query's plan.
   */
 object GraphScale {
 
@@ -39,21 +39,17 @@ object GraphScale {
 
   val MaxPartitions = 1024
 
-  /** Session conf flag: "true" disables the scaling (used by the
-    * ProfileGraphParts sweep, which sets partition counts itself).
-    */
-  val DisableKey = "spark.graft.graphscale.disabled"
-
   /** Scale the session's shuffle partitions to the lineitem input
-    * under `dir` (the basket source of every graph query).
+    * under `dir` (the basket source of every graph query). A missing
+    * lineitem table counts as 0 bytes, so the session parallelism
+    * floor applies; any other IO failure propagates.
     */
   def apply(s: SparkSession, dir: String): Unit = {
-    if (s.conf.getOption(DisableKey).exists(_.toBoolean)) return
     val p = new org.apache.hadoop.fs.Path(s"$dir/lineitem.parquet")
     val bytes =
       try p.getFileSystem(s.sparkContext.hadoopConfiguration)
         .getContentSummary(p).getLength
-      catch { case _: Throwable => 0L }
+      catch { case _: java.io.FileNotFoundException => 0L }
     val parts = math.max(s.sparkContext.defaultParallelism.toLong,
       math.min(MaxPartitions.toLong, bytes / BytesPerPartition))
     s.conf.set("spark.sql.shuffle.partitions", parts.toString)

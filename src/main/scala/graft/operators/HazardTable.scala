@@ -36,9 +36,8 @@ import Q._
   */
 object HazardTable {
 
-  /** Life-table tail shared with the X201 streaming maintenance: a
-    * (week, d_events, c_censored) frame → the at-risk recursion +
-    * hazard columns (one |weeks|-frame window).
+  /** Life-table tail: a (week, d_events, c_censored) frame → the
+    * at-risk recursion + hazard columns (one |weeks|-frame window).
     */
   def lifeTable(byWeek: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {

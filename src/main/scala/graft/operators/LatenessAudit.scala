@@ -8,7 +8,7 @@ import Q._
 /** X138 — event-time out-of-orderness / watermark audit: for each
   * event, its lateness against the maximum event time already seen in
   * ARRIVAL order (event_id — the feed's monotone arrival proxy, the
-  * same convention the X71 source and X123 contract use). This is the
+  * same convention the X71 source uses). This is the
   * measurement that makes a watermark choice honest: Structured
   * Streaming's `withWatermark(delay)` silently DROPS rows later than
   * the delay, so you pick the delay from this profile (p99/max

@@ -22,8 +22,7 @@ import Q._
   * is IEEE correctly-rounded on both engines). Groups with n < 2
   * days are EXCLUDED from the output entirely (the s_stat pair
   * self-join produces no row for a single-day series and the
-  * downstream joins are inner — both engines agree; MannKendallStream
-  * mirrors the drop with an explicit n ≥ 2 filter); only the
+  * downstream joins are inner — both engines agree); only the
   * all-values-tied case survives to the output and yields NULL z
   * (guarded division). Rejection bar =
   * N(0,1) 0.975 quantile embedded as a literal (the X147/X197

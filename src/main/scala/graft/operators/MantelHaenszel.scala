@@ -36,9 +36,8 @@ object MantelHaenszel {
   /** Fixed exposure threshold (deci-free constant). */
   val HighValue = 150000d
 
-  /** Per-month 2×2 cell census over an orders frame — the mergeable
-    * state [[graft.streaming.MantelHaenszelStream]] maintains (cells
-    * are sums: commute + associate, the STRONG slicing contract).
+  /** Per-month 2×2 cell census over an orders frame — shared with
+    * q284 [[BreslowDay]], which tests the same strata for homogeneity.
     */
   def cells(orders: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
@@ -55,9 +54,7 @@ object MantelHaenszel {
         c(!col("e") && !col("y")).as("dd"))
   }
 
-  /** The pooled estimate + RBG CI over a cell frame — ONE tree shared
-    * by q261 and the streaming read so the two cannot drift.
-    */
+  /** The pooled estimate + RBG CI over a cell frame. */
   def pooled(cellFrame: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
     val strata = cellFrame

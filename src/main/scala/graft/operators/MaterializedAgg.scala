@@ -204,8 +204,8 @@ object MaterializedAgg {
 
   /** The same exactly-once maintenance loop with CALLER-SUPPLIED
     * partial and combine forms — any associative+commutative state
-    * (X100's per-column profile rows and frozen-grid histogram cells
-    * ride this) gets the full swap/marker/recovery machinery without
+    * (the BM25, decayed-count, CDC and correlation-matrix states ride
+    * this) gets the full swap/marker/recovery machinery without
     * re-implementing it. `toPartials` maps a delta to the mergeable
     * shape; `combinePartials` must be insensitive to which side is
     * state and which is delta.
@@ -231,11 +231,10 @@ object MaterializedAgg {
   /** The ORDER-DEPENDENT sibling of [[mergeOnceAs]]: one exactly-once
     * fold step `state × delta → state` with the same swap/marker/
     * recovery machinery and replay idempotence. For operators whose
-    * update is a SEQUENTIAL fold (a running high-water mark, X123-style
-    * in-order state) rather than a commutative merge — the contract is
-    * the X123 one: chronological batch slicing reproduces the batch
-    * operator exactly; arbitrary slicing gets the batch form as its
-    * corrector. `step` receives None when no state is committed yet.
+    * update is a SEQUENTIAL fold of the committed state with the delta
+    * rather than a commutative merge (q154's [[IncrementalCc]], which
+    * warm-starts label propagation from the committed labels). `step`
+    * receives None when no state is committed yet.
     */
   def foldOnceAs(delta: DataFrame, path: String, batchId: Long,
       step: (Option[DataFrame], DataFrame) => DataFrame): Unit = {

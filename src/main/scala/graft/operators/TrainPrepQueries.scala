@@ -787,17 +787,31 @@ object TrainPrepQueries {
       ORDER BY d.doc_id
     """))
 
-  /** Batch face of the X69 streaming bottom-k reservoir
-    * ([[graft.streaming.StreamingSample]]): per-source deterministic
-    * k-sample by LCG-hash rank. The SAME definition the streaming
-    * state keeps, so a backfill over historical parquet and the live
-    * stream produce one sample (StreamingSampleSpec proves equality
-    * under adversarial batch slicing).
+  /** Per-stratum deterministic bottom-k sample (X69): the k docs with
+    * the smallest (q30's LCG hash, id) per stratum, via one window.
+    * Unlike an RNG reservoir it is replayable, and it does not depend
+    * on partitioning or on the order rows arrive in.
     */
+  def bottomKBatch(docs: DataFrame, stratumCol: String, idCol: String,
+      k: Int): DataFrame = {
+    // window over the ALIASED frame — the caller's column names are
+    // gone after the normalizing select
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("stratum"))
+      .orderBy(pmod(col("doc_id") * 1103515245L + 12345L,
+        lit(2147483647L)), col("doc_id"))
+    docs.select(col(stratumCol).as("stratum"), col(idCol).as("doc_id"))
+      .distinct()
+      .withColumn("rk", row_number().over(w))
+      .filter(col("rk") <= k)
+      .select(col("stratum"), col("doc_id"), col("rk"))
+      .orderBy(col("stratum"), col("rk"))
+  }
+
+  /** Per-source bottom-4 sample of the corpus by LCG-hash rank. */
   val q120 = GraftQuery(
     "q120_bottomk_reservoir",
-    (s, d) => graft.streaming.StreamingSample.bottomKBatch(
-      t(s, d, "documents"), "source", "doc_id", k = 4),
+    (s, d) => bottomKBatch(t(s, d, "documents"), "source", "doc_id", k = 4),
     Some("""
       SELECT stratum, doc_id, CAST(rk AS INTEGER) AS rk
       FROM (SELECT source AS stratum, doc_id,

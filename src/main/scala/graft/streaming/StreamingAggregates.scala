@@ -50,8 +50,8 @@ object StreamingAggregates {
     * user via Spark's native `session_window`, append mode — a session
     * emits once the watermark passes its end + gap, with state evicted
     * then (the property that bounds state at 100 TB). Parity contract
-    * (SessionStreamSpec, the X123/X140 pattern): fed CHRONOLOGICALLY,
-    * the emitted sessions equal batch q35 bit-for-bit with
+    * (SessionStreamSpec): fed CHRONOLOGICALLY, the emitted sessions
+    * equal batch q35 bit-for-bit with
     * `window.end = batch session_end + gap` (Spark defines a session
     * window's end as last-event-time + gap); the value sum is the same
     * DECIMAL(18,2) tree as q35's, so floats can't drift between the

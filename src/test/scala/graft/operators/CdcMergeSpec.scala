@@ -14,7 +14,7 @@ import graft.SparkSpec
   * late-arriving OLDER upsert (dropping the tombstone would resurrect
   * the deleted row); and the maintained form survives a REAL kill
   * between state swap and checkpoint commit over the X71 source — the
-  * same bar IncrementalCc/StreamingProfile/HeavyHitters meet.
+  * same bar IncrementalCc meets.
   */
 class CdcMergeSpec extends AnyFunSuite with SparkSpec {
   import spark.implicits._

@@ -11,7 +11,8 @@ import graft.SparkSpec
   * apportionment (floors + largest remainders, ties by stratum key)
   * and sum to EXACTLY n; membership is the h60-prefix per stratum, so
   * re-draws reproduce and a larger quota extends the prefix; the
-  * sf0.001 draw replays on the driver.
+  * sf0.001 draw replays on the driver. Also q120's per-source
+  * bottom-k-by-hash sample ([[TrainPrepQueries.bottomKBatch]]).
   */
 class StratifiedSampleSpec extends AnyFunSuite with SparkSpec {
   import spark.implicits._
@@ -99,5 +100,16 @@ class StratifiedSampleSpec extends AnyFunSuite with SparkSpec {
     val expect = hamilton(sizes, StratifiedSample.SampleN)
       .filter(_._2 > 0)
     assert(quotas === expect)
+  }
+
+  test("q120 bottom-k sample: per-source rank, partition-invariant") {
+    val k = 4
+    val docs = spark.read.parquet(s"$sf0001/documents.parquet")
+    val a = TrainPrepQueries.bottomKBatch(docs, "source", "doc_id", k)
+      .collect().toSeq
+    val b = TrainPrepQueries.bottomKBatch(docs.repartition(17), "source",
+      "doc_id", k).collect().toSeq
+    assert(a === b, "sample must be partition-invariant")
+    assert(a.groupBy(_.getString(0)).forall(_._2.size <= k))
   }
 }
