@@ -86,5 +86,5 @@ object OnnxScorer {
   /** True iff an ONNX Runtime jar is on this JVM's classpath. */
   def runtimeAvailable: Boolean =
     try { Class.forName("ai.onnxruntime.OrtEnvironment"); true }
-    catch { case _: Throwable => false }
+    catch { case _: ClassNotFoundException | _: LinkageError => false }
 }

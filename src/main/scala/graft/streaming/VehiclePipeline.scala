@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, StringType, StructField, StructType}
 
 import graft.functions.MockScorers
+import graft.functions.expressions.ConstantByReference
 
 /** Vehicle-counting streaming pipeline (SURVEY.md §3.3).
   *
@@ -51,6 +52,13 @@ object VehiclePipeline {
     * in 0..4 and that many class labels, comma-joined. Malformed base64
     * hashes as empty bytes → deterministic Detection, never a type-broken
     * row (reference bug `vehicle_consumer.py:104` NOT replicated).
+    *
+    * Each ~13 KB frame is decoded and hashed once: the hash is its own
+    * projected column, and the labels are four fixed `when(count >= i)`
+    * slots that `concat_ws` joins, skipping the nulls. Label i is
+    * `vehicleType(hash + i)`. A `transform(sequence(1, count), …)` lambda
+    * would be interpreted outside whole-stage codegen and would re-decode
+    * and re-hash the frame for every label it emits.
     */
   def detect(parsed: DataFrame): DataFrame = {
     // try_to_binary: malformed base64 → null → empty bytes (unbase64 alone
@@ -58,29 +66,32 @@ object VehiclePipeline {
     val bytes = coalesce(
       try_to_binary(coalesce(col("frame_data"), lit("")), lit("base64")),
       lit(Array.emptyByteArray))
-    val h = abs(xxhash64(bytes))
-    val classes = array(MockScorers.vehicleClasses.map(lit): _*)
+    val h = col("frame_hash")
     parsed
+      .withColumn("frame_hash", abs(xxhash64(bytes)))
       .withColumn("count", pmod(h, lit(5)).cast("int"))
-      .withColumn("vehicle_type",
-        when(col("count") === 0, lit(""))
-          .otherwise(array_join(
-            transform(sequence(lit(1), col("count")),
-              i => element_at(classes, (pmod(h + i, lit(4)) + 1).cast("int"))),
-            ",")))
+      .withColumn("vehicle_type", concat_ws(",", (1 to 4).map(i =>
+        when(col("count") >= i, MockScorers.vehicleType(h + i))): _*))
+      .drop("frame_hash")
   }
 
   /** Timestamp shaping (S18/S19, `vehicle_consumer.py:116-123`): frame_time
     * truncates to whole seconds exactly like the reference's
     * from_unixtime path; processed_at is an injectable clock for tests.
+    *
+    * A streaming query turns `current_timestamp()` into the batch's own
+    * timestamp, which codegen would inline as a Java literal, so every
+    * micro-batch would compile a new class. [[ConstantByReference]] hands
+    * the value to the generated code by reference instead: the code text,
+    * and so the compiled class, is the same in every batch.
     */
   def shape(detected: DataFrame,
       processedAt: Option[java.sql.Timestamp] = None): DataFrame =
     detected
       .withColumn("frame_time",
         timestamp_seconds(floor(col("timestamp")).cast("long")))
-      .withColumn("processed_at",
-        processedAt.map(lit(_)).getOrElse(current_timestamp()))
+      .withColumn("processed_at", ConstantByReference(
+        processedAt.map(lit(_)).getOrElse(current_timestamp())))
       .select(col("camera_id"), col("vehicle_type"), col("count"),
         col("frame_time"), col("processed_at"))
 
