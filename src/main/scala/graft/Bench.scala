@@ -1,675 +1,233 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Paths}
+
+import scala.collection.mutable
+import scala.util.control.NonFatal
+
+import org.apache.commons.io.FileUtils
+import org.apache.spark.sql.{DataFrame, Row, SparkSession, classic}
+import org.apache.spark.sql.execution.{FileSourceScanExec, InputAdapter,
+  QueryExecution, SQLExecution, SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec,
+  AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.datasources.orc.OrcFileFormat
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec}
+import org.apache.spark.sql.execution.joins.BaseJoinExec
+
+/** Batch-tier benchmark: each selected query materialized in full, timed
+  * as min-of-`SPARK_GRAFT_REPEAT` (default 3) and fingerprinted, then the
+  * quality probes and the decode and curation rates once. Prints one JSON
+  * line and writes it to `SPARK_GRAFT_BENCH_OUT` (default
+  * `BENCH_FULL.json` in the working directory, the project root under
+  * `sbt runMain`). Also reads `SPARK_GRAFT_SF_DIR`, `_CPUS`, `_ONLY`
+  * ([[SparkEntry.select]]), `_EXTRA_CONF` (`k=v;k=v` session overrides)
+  * and `_PLAN_DUMP` (a directory for each query's executed plan and
+  * hashed lines).
+  */
 object Bench {
   def main(args: Array[String]): Unit = {
+    val selected = SparkEntry.select(sys.env.get("SPARK_GRAFT_ONLY"))
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
-    // ONE source of session truth (GraftSession) so parquet/timezone
-    // semantics can't drift between the entry points (ADVICE r8)
-    val spark = GraftSession.local(cpus)
-    // scratch-run conf overrides ("k=v;k=v") — used by tools/planstab.sh
-    // to prove the plan_changes guard fires on a REAL plan flip (e.g.
-    // autoBroadcastJoinThreshold=-1 turning broadcasts into SMJ)
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").filter(_.nonEmpty)
-      .foreach(_.split(";").filter(_.nonEmpty).foreach { kv =>
-      val Array(k, v) = kv.split("=", 2)
-      spark.conf.set(k, v)
-      System.err.println(s"[bench] scratch conf override: $k=$v")
-    })
-    // optional filters for local iteration: SPARK_GRAFT_ONLY=q42,q43
-    // runs a subset; SPARK_GRAFT_REPEAT overrides the repeat count.
-    // Default is min-of-3: this host shows multi-x background-noise
-    // swings (SCALE.md), and single-shot timings mis-adjudicated two
-    // queries in round 2 — the minimum over 3 runs is the noise-robust
-    // statistic the driver's per-round BENCH should record.
-    val only = sys.env.get("SPARK_GRAFT_ONLY").filter(_.nonEmpty)
-      .map(_.split(",").toSet)
     val repeat = sys.env.getOrElse("SPARK_GRAFT_REPEAT", "3").toInt
-    val selected = SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
+    val dumpDir = sys.env.get("SPARK_GRAFT_PLAN_DUMP").filter(_.nonEmpty)
+      .map(d => Files.createDirectories(Paths.get(d)))
+    val outFile = Paths.get(
+      sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_FULL.json"))
+    // plan_changes compares against the artifact this run replaces, and
+    // only when that artifact hashed with the same fingerprint version
+    val baseline = if (Files.exists(outFile)) Files.readString(outFile) else ""
+    val baselineHashes: Map[String, String] =
+      if (!baseline.contains(s""""plan_hash_ver":$PlanHashVersion,""")) Map.empty
+      else """"(q[0-9][^"]*)":"([0-9a-f]{8})"""".r
+        .findAllMatchIn(baseline).map(m => m.group(1) -> m.group(2)).toMap
 
-    // artifact path, resolved up front because the spike guard reads the
-    // PREVIOUS (committed) artifact from the same location before this
-    // run overwrites it
-    val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", {
-      var dir = java.nio.file.Paths.get("").toAbsolutePath
-      while (dir != null &&
-          !(java.nio.file.Files.exists(dir.resolve("build.sbt")) &&
-            java.nio.file.Files.exists(
-              dir.resolve("src/main/scala/graft/SparkEntry.scala"))))
-        dir = dir.getParent
-      (if (dir == null) java.nio.file.Paths.get("BENCH_FULL.json")
-      else dir.resolve("BENCH_FULL.json")).toString
-    })
-    // committed per-query baseline for the spike guard (r9: q40/q11/q64
-    // spiked 20×/12×/4.9× in ONE driver run on identical code — far
-    // outside the ±30 % band — and the whole-suite canary bracket
-    // missed them because the suite total stayed within 1.3 %).
-    //
-    // The baseline is the artifact at the ROUND-START commit (the last
-    // driver round-boundary commit), not the working file: in-session
-    // reruns overwrite the working file, so comparing against it let
-    // r11's q53 (3.5×) and q79 (2.9×) cross-round swings publish with
-    // `spikes: []` (VERDICT r11 item 4). Fallbacks: HEAD's committed
-    // artifact, then the working file (fresh clone with no history).
-    val repoRoot = java.nio.file.Paths.get(outFile).getParent
-    def gitShow(ref: String): Option[String] = try {
-      val pb = new ProcessBuilder("git", "-C", repoRoot.toString, "show",
-        s"$ref:BENCH_FULL.json")
-      pb.redirectErrorStream(false)
-      val p = pb.start()
-      val out = new String(p.getInputStream.readAllBytes(),
-        java.nio.charset.StandardCharsets.UTF_8)
-      if (p.waitFor() == 0 && out.nonEmpty) Some(out) else None
-    } catch { case _: Throwable => None }
-    val roundStartRef: Option[String] = try {
-      val pb = new ProcessBuilder("git", "-C", repoRoot.toString, "log",
-        "-E", "--grep", "^round [0-9]+:", "--format=%H", "-n", "1")
-      val p = pb.start()
-      val out = new String(p.getInputStream.readAllBytes(),
-        java.nio.charset.StandardCharsets.UTF_8).trim
-      if (p.waitFor() == 0 && out.nonEmpty) Some(out) else None
-    } catch { case _: Throwable => None }
-    val baselineArtifact: Option[String] =
-      roundStartRef.flatMap(gitShow)
-        .orElse(gitShow("HEAD"))
-        .orElse(try {
-          val p = java.nio.file.Paths.get(outFile)
-          if (java.nio.file.Files.exists(p))
-            Some(java.nio.file.Files.readString(p))
-          else None
-        } catch { case _: Throwable => None })
-    System.err.println(s"[bench] spike-guard baseline: " +
-      roundStartRef.map(r => s"round-start commit ${r.take(10)}")
-        .getOrElse("no round-boundary commit; HEAD/working fallback"))
-    val committedTimes: Map[String, Double] = baselineArtifact.map { s =>
-      val q = """"(q[0-9][^"]*)":(-?[0-9]+\.[0-9]+)""".r
-      q.findAllMatchIn(s).map(m => m.group(1) -> m.group(2).toDouble).toMap
-    }.getOrElse(Map.empty)
-    // only diff hashes produced by the SAME fingerprint definition —
-    // r12's v1 hashed a never-executed plan, v2 hashes the executed
-    // one, so a cross-version diff would flag all 159 queries at once
-    // and train readers to ignore plan_changes (VERDICT r12 item 1)
-    val baselinePlanVer: Int = baselineArtifact
-      .flatMap(s => """"plan_hash_ver":(\d+)""".r
-        .findFirstMatchIn(s).map(_.group(1).toInt))
-      .getOrElse(1)
-    val committedPlanHashes: Map[String, String] =
-      if (baselinePlanVer != PlanHashVersion) {
-        System.err.println(s"[bench] baseline plan_hash_ver " +
-          s"$baselinePlanVer != current $PlanHashVersion: " +
-          "plan_changes suppressed across the version boundary")
-        Map.empty
-      } else baselineArtifact.map { s =>
-        val h = """"(q[0-9][^"]*)":"([0-9a-f]{8})"""".r
-        h.findAllMatchIn(s).map(m => m.group(1) -> m.group(2)).toMap
-      }.getOrElse(Map.empty)
+    val spark = GraftSession.local(cpus)
+    try {
+      sys.env.get("SPARK_GRAFT_EXTRA_CONF").filter(_.nonEmpty)
+        .foreach(_.split(";").filter(_.nonEmpty).foreach { kv =>
+          val Array(k, v) = kv.split("=", 2)
+          spark.conf.set(k, v)
+          System.err.println(s"[bench] conf override: $k=$v")
+        })
 
-    val planHashes = scala.collection.mutable.Map.empty[String, String]
-    def runSuite(): (Map[String, Double], Seq[String]) = {
-      val failed = scala.collection.mutable.ListBuffer.empty[String]
-      val results = selected.map { case (name, fn) =>
-        val times = (1 to repeat).flatMap { _ =>
-          // per-query conf isolation: graph queries scale
-          // spark.sql.shuffle.partitions with their input
-          // (operators.GraphScale); reset to the session default so
-          // that scaling never leaks into the next query's plan
+      val hashes = mutable.Map.empty[String, String]
+      val times = selected.toSeq.sortBy(_._1).map { case (name, build) =>
+        name -> (try (1 to repeat).map { _ =>
+          // graph queries scale spark.sql.shuffle.partitions with their
+          // input (operators.GraphScale); reset it so that never leaks
+          // into the next query's plan
           spark.conf.set("spark.sql.shuffle.partitions", cpus.toString)
           val t0 = System.nanoTime()
-          try {
-            val df = fn(spark, sfDir)
-            // the timed action is the count-aggregate COLLECTED THROUGH
-            // ITS OWN QueryExecution (Dataset.count() plans a separate
-            // one), so `agg.queryExecution.executedPlan` afterwards IS
-            // the executed, AQE-finalized tree — r12's fingerprint read
-            // a fresh never-executed plan (isFinalPlan=false) and its
-            // "post-AQE" claim was wrong (ADVICE r12)
-            val agg = df.groupBy().count()
-            agg.collect()
-            val t = (System.nanoTime() - t0) / 1e9
-            // fingerprint the EXECUTED (post-AQE, final) plan once per
-            // query — a silent shape regression (a broadcast flipping
-            // to SMJ) then shows as a plan_hash diff in the artifact
-            // even when no PlanSpec gate watches that query (VERDICT
-            // r11 item 7)
-            if (!planHashes.contains(name))
-              try { planHashes(name) = planFingerprint(name, agg) }
-              catch { case _: Throwable => () }
-            Some(t)
-          } catch {
-            case e: Throwable =>
-              System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-              None
+          val qe = materialize(build(spark, sfDir))
+          val secs = (System.nanoTime() - t0) / 1e9
+          if (!hashes.contains(name)) {
+            val plan = qe.executedPlan
+            hashes(name) = planFingerprint(plan)
+            dumpDir.foreach(d => Files.writeString(d.resolve(s"$name.txt"),
+              plan.treeString + "==== hashed lines ====\n" +
+                planLines(plan).mkString("", "\n", "\n")))
           }
+          secs
+        }.min
+        catch { case NonFatal(e) =>
+          // a failed query must not bench as fast: -1, listed in `failed`
+          System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
+          -1.0
+        })
+      }
+      val failed = times.collect { case (name, t) if t < 0 => name }
+      val total = times.map(_._2).filter(_ >= 0).sum
+
+      val planChanges = hashes.toSeq.sortBy(_._1).collect {
+        case (name, h) if !AdaptivePlanAllowlist(name) &&
+            baselineHashes.get(name).exists(_ != h) =>
+          System.err.println(s"[bench] plan_hash changed: $name " +
+            s"(${baselineHashes(name)} -> $h)")
+          name
+      }
+
+      def str(s: String): String = "\"" + s + "\""
+      def obj(kvs: Seq[(String, String)]): String =
+        kvs.map { case (k, v) => str(k) + ":" + v }.mkString("{", ",", "}")
+      def arr(xs: Seq[String]): String = xs.map(str).mkString("[", ",", "]")
+      val line = obj(Seq(
+        "metric" -> str("total"),
+        "value" -> f"$total%.3f",
+        "unit" -> str("sec"),
+        "stat" -> str(s"min_of_$repeat"),
+        "queries" -> obj(times.map { case (k, t) => k -> f"$t%.3f" }),
+        "failed" -> arr(failed),
+        "plan_hash_ver" -> PlanHashVersion.toString,
+        "plan_hashes" -> obj(hashes.toSeq.sortBy(_._1)
+          .map { case (k, h) => k -> str(h) }),
+        "plan_changes" -> arr(planChanges),
+        "plan_adaptive" -> arr(AdaptivePlanAllowlist.toSeq.sorted),
+        "sf" -> str(sfDir),
+        "vehicle_fps_real" -> vehicleRealFps(spark).toString,
+        "curation_docs_per_sec" -> curationIngestRate(spark).toString,
+        "curation_docs_per_sec_packed" ->
+          curationIngestRate(spark, packed = true).toString,
+        "ann_recall" -> annRecall(spark, sfDir),
+        "bbit" -> bbitQuality(spark, sfDir),
+        "gk_histogram" -> gkHistogram(spark, sfDir)))
+      println(line)
+      System.err.println(s"[bench] writing artifact to ${outFile.toAbsolutePath}")
+      Files.writeString(outFile, line + "\n")
+    } finally spark.stop()
+  }
+
+  /** Runs `df` to completion through its own `QueryExecution`: every
+    * column of every row is produced, as by a `noop` write, and nothing
+    * is collected. Afterwards `executedPlan` is the final adaptive plan.
+    */
+  private[graft] def materialize(df: DataFrame): QueryExecution = {
+    val qe = df.asInstanceOf[classic.Dataset[Row]].queryExecution
+    SQLExecution.withNewExecutionId(qe, Some("bench"))(qe.toRdd.foreach(_ => ()))
+    qe
+  }
+
+  /** Version of [[planFingerprint]], published as `plan_hash_ver`; hashes
+    * of different versions are never compared (6: the structural walk). */
+  val PlanHashVersion = 6
+
+  /** Queries whose executed plan is bistable on identical code: AQE's
+    * runtime broadcast/sort-merge choice lands on a near-threshold frame,
+    * so two identical runs execute different, equally correct plans.
+    * Still hashed and published, but left out of `plan_changes`. q105:
+    * the df-capped MOSS fingerprint pair join sits at the adaptive
+    * broadcast threshold at sf0.1.
+    */
+  val AdaptivePlanAllowlist: Set[String] = Set("q105_winnow_matches")
+
+  /** The hashed description of an executed plan: one line per operator,
+    * sorted and distinct. Wrappers that only say how or when an operator
+    * ran are skipped: the adaptive root, query stages, exchange reuse,
+    * AQE shuffle reads and whole-stage codegen. A line names the
+    * operator, plus the join type of a join, the partitioning kind of an
+    * exchange (never its partition count, which follows the host) and
+    * whether a file scan's reader applies any pushed filter. Subquery
+    * plans are walked too. Distinct lines, not a multiset: where AQE picks
+    * the broadcast build side at run time, an extra identical exchange
+    * can appear.
+    */
+  private[graft] def planLines(plan: SparkPlan): Seq[String] = {
+    def unwrap(p: SparkPlan): SparkPlan = p match {
+      case a: AdaptiveSparkPlanExec => unwrap(a.executedPlan)
+      case s: QueryStageExec => unwrap(s.plan)
+      case r: ReusedExchangeExec => unwrap(r.child)
+      case r: AQEShuffleReadExec => unwrap(r.child)
+      case w: WholeStageCodegenExec => unwrap(w.child)
+      case i: InputAdapter => unwrap(i.child)
+      case n => n
+    }
+    def line(n: SparkPlan): String = n match {
+      case j: BaseJoinExec => s"${j.nodeName} ${j.joinType}"
+      case e: Exchange => s"${e.nodeName} " +
+        e.outputPartitioning.getClass.getSimpleName.stripSuffix("$")
+      case f: FileSourceScanExec =>
+        // Spark lists PushedFilters whether or not the reader applies
+        // them; parquet and ORC readers apply them only when their
+        // format's filterPushdown conf is on
+        val applied = f.relation.fileFormat match {
+          case _: ParquetFileFormat => f.conf.parquetFilterPushDown
+          case _: OrcFileFormat => f.conf.orcFilterPushDown
+          case _ => true
         }
-        // a crashing query must not bench as "fast": report -1, list in `failed`
-        if (times.size < repeat) { failed += name; name -> -1.0 }
-        else name -> times.min
-      }
-      (results, failed.toList)
+        val pushed = applied && f.metadata.get("PushedFilters").exists(_ != "[]")
+        s"${f.nodeName} pushed=$pushed"
+      case n => n.nodeName
     }
-
-    // Canary gate (SCALE.md protocol): this host shows multi-× background
-    // noise, and the round-3 driver artifact recorded two phantom
-    // regressions that same-day reruns refuted. Bracket the suite with a
-    // fixed CPU-bound probe; if the window shifted >2× while the suite
-    // ran, the timings are suspect — rerun once and record the
-    // adjudication inline so a noisy artifact is never read as a clean one.
-    canarySecs(spark) // discarded warmup: codegen + executor spin-up
-    var canaryBefore = canarySecs(spark)
-    var canaryAfter = 0.0
-    var reruns = -1
-    var results = Map.empty[String, Double]
-    var failed = Seq.empty[String]
-    var degraded = false
-    do {
-      reruns += 1
-      val (r, f) = runSuite()
-      results = r; failed = f
-      canaryAfter = canarySecs(spark)
-      degraded = math.max(canaryBefore, canaryAfter) >
-        2.0 * math.min(canaryBefore, canaryAfter)
-      if (degraded && reruns == 0) {
-        System.err.println(f"[bench] canary shifted " +
-          f"$canaryBefore%.3f -> $canaryAfter%.3f s: noisy window, rerunning")
-        canaryBefore = canarySecs(spark)
-      }
-    } while (degraded && reruns < 1)
-
-    // per-query spike adjudication: any query >3× its committed time
-    // (and >0.25 s absolute, so sub-100 ms jitter never triggers) gets
-    // an immediate same-session rerun; the recorded value is the min of
-    // ALL observations and the adjudication travels in the artifact —
-    // a one-off GC/host spike can no longer read as a regression.
-    //
-    // DRIFT tier (VERDICT r12 item 2): r12 shipped q126 +65 % and q136
-    // +42 % on unchanged code — outside the documented ±30 % noise band
-    // but under the 3× spike bar, so nothing reran them and the
-    // artifact carried an unadjudicated number. Now any query whose
-    // min lands in (1.35×, 3×] of committed (and >0.25 s absolute)
-    // also reruns once, the min of all observations is recorded, and
-    // the adjudication travels in `drift` — noise self-corrects in the
-    // artifact, a real slowdown survives the rerun and is VISIBLY
-    // flagged rather than buried in the total.
-    val spikes = scala.collection.mutable.ListBuffer.empty[String]
-    val drift = scala.collection.mutable.ListBuffer.empty[String]
-    def rerunMinOf(name: String, fallback: Double): Double = try {
-      (1 to repeat).map { _ =>
-        spark.conf.set("spark.sql.shuffle.partitions", cpus.toString)
-        val t0 = System.nanoTime()
-        selected(name)(spark, sfDir).groupBy().count().collect()
-        (System.nanoTime() - t0) / 1e9
-      }.min
-    } catch { case _: Throwable => fallback } // crash → keep first value
-    results = results.map { case (name, v) =>
-      committedTimes.get(name) match {
-        case Some(base) if base > 0 && v > 3.0 * base && v - base > 0.25 =>
-          val rerunMin = rerunMinOf(name, v)
-          System.err.println(f"[bench] $name spiked: $v%.3f s vs " +
-            f"committed $base%.3f s; rerun min $rerunMin%.3f s")
-          spikes += f"""{"query":"$name","first":$v%.3f,""" +
-            f""""rerun":$rerunMin%.3f,"committed":$base%.3f}"""
-          name -> math.min(v, rerunMin)
-        case Some(base) if base > 0 && v > 1.35 * base && v - base > 0.25 =>
-          val rerunMin = rerunMinOf(name, v)
-          val verdict =
-            if (rerunMin <= 1.35 * base) "noise" else "persistent"
-          System.err.println(f"[bench] $name drifted: $v%.3f s vs " +
-            f"committed $base%.3f s; rerun min $rerunMin%.3f s " +
-            s"($verdict)")
-          drift += f"""{"query":"$name","first":$v%.3f,""" +
-            f""""rerun":$rerunMin%.3f,"committed":$base%.3f,""" +
-            f""""verdict":"$verdict"}"""
-          name -> math.min(v, rerunMin)
-        case _ => name -> v
-      }
+    def walk(p: SparkPlan): Seq[String] = {
+      val n = unwrap(p)
+      line(n) +: (n.children ++ n.subqueries).flatMap(walk)
     }
-
-    // sorted keys + 3-decimal values: halves the line so the driver's
-    // tail-capture can't truncate away early-serialized entries (round 4
-    // lost ~20 keys including the brand-new q72b number that way)
-    val qs = results.toSeq.sortBy(_._1)
-      .map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
-      .mkString("{", ",", "}")
-    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val canaryJson = f"""{"before":$canaryBefore%.3f,"after":""" +
-      f"""$canaryAfter%.3f,"reruns":$reruns,"degraded":$degraded}"""
-    val total = results.values.filter(_ >= 0).sum
-
-    // streaming-parity rates vs BASELINE.md (ABSA 10 rows/s cap, vehicle
-    // 8 fps detector): drive each pipeline end-to-end through a real
-    // StreamingQuery / the full transform chain and report sustained
-    // throughput alongside the batch timings. Bracketed by their OWN
-    // canary (r10: the batch suite's bracket had already closed when a
-    // degraded tail window published absa 5.6k rows/s vs 23.3k on
-    // identical code — an uninterpretable artifact number); a >2×
-    // canary shift reruns the rates once and the adjudication travels
-    // in `rates_canary`.
-    var ratesCanaryBefore = canarySecs(spark)
-    var ratesCanaryAfter = 0.0
-    var ratesReruns = -1
-    var ratesDegraded = false
-    var absaRate = -1.0; var vehicleRate = -1.0; var vehicleRealFps = -1.0
-    var curationRate = -1.0; var curationRatePacked = -1.0
-    do {
-      ratesReruns += 1
-      val (a, v, vr) = streamingRates(spark)
-      absaRate = a; vehicleRate = v; vehicleRealFps = vr
-      curationRate = curationIngestRate(spark)
-      curationRatePacked = curationIngestRate(spark, packed = true)
-      ratesCanaryAfter = canarySecs(spark)
-      ratesDegraded = math.max(ratesCanaryBefore, ratesCanaryAfter) >
-        2.0 * math.min(ratesCanaryBefore, ratesCanaryAfter)
-      if (ratesDegraded && ratesReruns == 0) {
-        System.err.println(f"[bench] rates canary shifted " +
-          f"$ratesCanaryBefore%.3f -> $ratesCanaryAfter%.3f s: " +
-          "noisy window, rerunning streaming/ingest rates")
-        ratesCanaryBefore = canarySecs(spark)
-      }
-    } while (ratesDegraded && ratesReruns < 1)
-    val ratesCanaryJson = f"""{"before":$ratesCanaryBefore%.3f,"after":""" +
-      f"""$ratesCanaryAfter%.3f,"reruns":$ratesReruns,""" +
-      f""""degraded":$ratesDegraded}"""
-
-    // RATE drift tier (VERDICT r14 item 6): r14 published
-    // curation_docs_per_sec_packed at 0.43× committed (−57 %), absa
-    // −16 % and vehicle-real −19 % alongside, on a round that touched
-    // none of that code — the r13 drift tier covered per-query wall
-    // times but NOT the rate block, so the halving shipped silently.
-    // Each rate is now compared against the round-start artifact; a
-    // value outside [÷1.5, ×1.5] of committed is re-measured once,
-    // the recorded value is the BEST (max) observation — rates are
-    // throughput, host noise only pushes them DOWN — and the
-    // adjudication travels in `rates_drift` with a noise/persistent
-    // verdict, exactly like the wall-time tier.
-    val committedRate: Map[String, Double] = baselineArtifact.map { s =>
-      Seq("absa_rows_per_sec", "vehicle_fps", "vehicle_fps_real",
-        "curation_docs_per_sec", "curation_docs_per_sec_packed")
-        .flatMap { k =>
-          ("\"" + k + "\":(-?[0-9.]+)").r.findFirstMatchIn(s)
-            .map(m => k -> m.group(1).toDouble)
-        }.toMap
-    }.getOrElse(Map.empty)
-    val ratesDrift = scala.collection.mutable.ListBuffer.empty[String]
-    // band tightened 1.5 → 1.35 (VERDICT r18 item 3): the r18 closing
-    // artifact shipped curation_docs_per_sec at ratio 0.697 against a
-    // flat pack (dispersion 1.711) UNADJUDICATED because 0.697 sat
-    // just inside the old ±1.5× cutoff — the epoch protocol's own
-    // "one rate moves, pack flat → adjudicate that operator" signature
-    // escaped through the band. 1.35 matches the wall-time drift
-    // tier's trigger, so a single-rate outlier now always gets its
-    // rerun + verdict instead of silently becoming the new committed.
-    def rateOutOfBand(key: String, v: Double): Boolean =
-      committedRate.get(key).exists(b => b > 0 && v > 0 &&
-        (v < b / 1.35 || v > b * 1.35))
-    def adjudicateRate(key: String, first: Double, rerun: Double): Double = {
-      val base = committedRate(key)
-      // the max-of-observations rule is justified only for LOW-side
-      // drift (host noise pushes throughput down, never up); a
-      // high-side first reading is a timer glitch until the
-      // re-measurement confirms it, so that direction records the
-      // rerun instead of publishing a one-off inflation as the new
-      // committed rate (ADVICE r15)
-      val best =
-        if (first > base * 1.35) rerun else math.max(first, rerun)
-      val verdict = if (rateOutOfBand(key, best)) "persistent" else "noise"
-      System.err.println(f"[bench] rate $key drifted: $first%.1f vs " +
-        f"committed $base%.1f; re-measured $rerun%.1f ($verdict)")
-      ratesDrift += f"""{"rate":"$key","first":$first%.3f,""" +
-        f""""rerun":$rerun%.3f,"committed":$base%.3f,""" +
-        f""""verdict":"$verdict"}"""
-      best
-    }
-    if (Seq("absa_rows_per_sec" -> absaRate, "vehicle_fps" -> vehicleRate,
-        "vehicle_fps_real" -> vehicleRealFps)
-        .exists { case (k, v) => rateOutOfBand(k, v) }) {
-      val (a2, v2, vr2) = streamingRates(spark)
-      if (rateOutOfBand("absa_rows_per_sec", absaRate))
-        absaRate = adjudicateRate("absa_rows_per_sec", absaRate, a2)
-      if (rateOutOfBand("vehicle_fps", vehicleRate))
-        vehicleRate = adjudicateRate("vehicle_fps", vehicleRate, v2)
-      if (rateOutOfBand("vehicle_fps_real", vehicleRealFps))
-        vehicleRealFps = adjudicateRate("vehicle_fps_real", vehicleRealFps, vr2)
-    }
-    if (rateOutOfBand("curation_docs_per_sec", curationRate))
-      curationRate = adjudicateRate("curation_docs_per_sec",
-        curationRate, curationIngestRate(spark))
-    if (rateOutOfBand("curation_docs_per_sec_packed", curationRatePacked))
-      curationRatePacked = adjudicateRate("curation_docs_per_sec_packed",
-        curationRatePacked, curationIngestRate(spark, packed = true))
-    val ratesDriftJson = ratesDrift.mkString("[", ",", "]")
-
-    // RATE epoch control (VERDICT r17 item 5): the ±1.5× band above
-    // only fires per-rate, so a fleet-wide host-epoch shift that moves
-    // every rate by, say, 1.3× ships silently — exactly the failure
-    // mode the r17 query-time protocol closed with its uniform control
-    // column. Publish every rate's ratio-vs-committed PLUS the
-    // geometric-mean ratio and its dispersion (max/min of the ratios):
-    // a geomean well off 1.0 with LOW dispersion is the host epoch
-    // moving (adjudicate once, fleet-wide); a single rate moving with
-    // the others flat is code. The rates canary (wall-time control row)
-    // travels alongside in `rates_canary`.
-    val ratesEpochJson: String = {
-      val cur = Seq(
-        "absa_rows_per_sec" -> absaRate,
-        "vehicle_fps" -> vehicleRate,
-        "vehicle_fps_real" -> vehicleRealFps,
-        "curation_docs_per_sec" -> curationRate,
-        "curation_docs_per_sec_packed" -> curationRatePacked)
-      val entries = cur.flatMap { case (k, v) =>
-        committedRate.get(k).filter(b => b > 0 && v > 0).map { b =>
-          (f""""$k":{"value":$v%.3f,"committed":$b%.3f,""" +
-            f""""ratio":${v / b}%.4f}""", v / b)
-        }
-      }
-      val ratios = entries.map(_._2)
-      val geo =
-        if (ratios.isEmpty) 1.0
-        else math.exp(ratios.map(math.log).sum / ratios.size)
-      val disp = if (ratios.isEmpty) 1.0 else ratios.max / ratios.min
-      (entries.map(_._1) :+
-        f""""geomean_ratio":$geo%.4f""" :+
-        f""""dispersion":$disp%.4f""").mkString("{", ",", "}")
-    }
-    val annRecallJson = annRecall(spark, sfDir)
-    val bbitJson = bbitQuality(spark, sfDir)
-    val gkJson = gkHistogram(spark, sfDir)
-    val spikesJson = spikes.mkString("[", ",", "]")
-    val driftJson = drift.mkString("[", ",", "]")
-
-    // plan-shape drift vs the round-start artifact: a changed hash is
-    // not a failure (plans legitimately evolve with code changes) but
-    // it must be VISIBLE, so an unintended flip never ships silently
-    val planChanges = planHashes.toSeq.sortBy(_._1).collect {
-      case (name, h) if !AdaptivePlanAllowlist(name) &&
-        committedPlanHashes.get(name).exists(_ != h) => name
-    }
-    planChanges.foreach(n => System.err.println(
-      s"[bench] plan_hash changed vs round-start baseline: $n " +
-        s"(${committedPlanHashes(n)} -> ${planHashes(n)})"))
-    val planHashJson = planHashes.toSeq.sortBy(_._1)
-      .map { case (k, v) => "\"" + k + "\":\"" + v + "\"" }
-      .mkString("{", ",", "}")
-    val planChangesJson = planChanges.map("\"" + _ + "\"")
-      .mkString("[", ",", "]")
-
-    // r5-vs-r6 ran byte-identical code and still saw ±25-30 % per-query
-    // swings (q42 +25 %, q68 −30 %): the recorded statistic is min-of-N
-    // and the note travels in the artifact so a future reader never
-    // adjudicates a single-query delta inside that band as a regression.
-    val line = f"""{"metric":"total","value":$total%.3f,"unit":"sec","stat":"min_of_$repeat","noise_note":"per-query swings up to +/-30pct on identical code (r5 vs r6 calibration); 1.35x-3x vs committed is rerun and adjudicated in `drift`, beyond 3x in `spikes` -- an unexplained cross-round delta can no longer ship unadjudicated","queries":$qs,"failed":$failedJson,"canary":$canaryJson,"rates_canary":$ratesCanaryJson,"rates_drift":$ratesDriftJson,"rates_epoch":$ratesEpochJson,"spikes":$spikesJson,"drift":$driftJson,"plan_hash_ver":$PlanHashVersion,"plan_hashes":$planHashJson,"plan_changes":$planChangesJson,"plan_adaptive":${AdaptivePlanAllowlist.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")},"sf":"$sfDir","absa_rows_per_sec":$absaRate,"vehicle_fps":$vehicleRate,"vehicle_fps_real":$vehicleRealFps,"curation_docs_per_sec":$curationRate,"curation_docs_per_sec_packed":$curationRatePacked,"ann_recall":$annRecallJson,"bbit":$bbitJson,"gk_histogram":$gkJson}"""
-    println(line)
-    // persist the full line INSIDE the repo (the round commits it), so
-    // all per-query times stay recoverable even when the driver's
-    // stdout tail-capture truncates the line (r4 lost ~20 keys that
-    // way); anchored to the project root found by walking up from the
-    // cwd (a bare relative path lands outside the repo when the runner
-    // isn't launched from the root; a hardcoded absolute path breaks
-    // every other clone)
-    // anchor on a graft-unique marker (build.sbt alone would match any
-    // nested sbt project the runner happens to be launched from);
-    // outFile resolved up top so the spike guard could read the
-    // previous artifact before this overwrite.
-    // a mis-anchored write should be visible, not silent
-    System.err.println(s"[bench] writing artifact to $outFile")
-    try java.nio.file.Files.writeString(java.nio.file.Paths.get(outFile),
-      line + "\n")
-    catch { case e: Throwable =>
-      System.err.println(s"[bench] could not write $outFile: ${e.getMessage}")
-    }
-    // VERDICT r15 item 3 (open since r11): the driver regenerates
-    // artifacts AFTER the round's closing commit, so every snapshot
-    // found a dirty tree. A FULL bench run now commits the artifact
-    // files itself (its own output plus any round artifacts earlier
-    // driver steps left uncommitted) — never on partial
-    // SPARK_GRAFT_ONLY iterations, opt-out via SPARK_GRAFT_NO_COMMIT=1,
-    // best-effort (a missing git or identity only logs).
-    if (only.isEmpty && !sys.env.contains("SPARK_GRAFT_NO_COMMIT") &&
-        repoRoot != null) {
-      def git(cmd: Seq[String]): Int = try {
-        val pb = new ProcessBuilder(
-          (Seq("git", "-C", repoRoot.toString) ++ cmd): _*)
-        pb.redirectErrorStream(true)
-        val p = pb.start()
-        val out = new String(p.getInputStream.readAllBytes(),
-          java.nio.charset.StandardCharsets.UTF_8).trim
-        val code = p.waitFor()
-        if (code != 0 && cmd.head != "diff")
-          System.err.println(s"[bench] git ${cmd.head} failed: $out")
-        code
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] git unavailable: ${e.getMessage}"); 1
-      }
-      val names = Option(repoRoot.toFile.list()).map(_.toSeq)
-        .getOrElse(Seq.empty)
-        .filter(_.matches("BENCH_r\\d+\\.json|CORRECTNESS_r\\d+\\.json"))
-      git(Seq("add", "--", "BENCH_FULL.json") ++
-        Seq("LEAKCHECK.json").filter(n =>
-          java.nio.file.Files.exists(repoRoot.resolve(n))) ++ names)
-      if (git(Seq("diff", "--cached", "--quiet")) != 0)
-        git(Seq("commit", "-m", "bench: refresh benchmark artifacts"))
-    }
-    spark.stop()
+    walk(plan).distinct.sorted
   }
 
-  /** Fingerprint version, published as `plan_hash_ver` in the artifact.
-    * v2 = executed (post-AQE, final) plan of the counted query — the
-    * pre-r13 v1 hashed a never-executed re-plan, so v1 and v2 hashes
-    * are incomparable and the diff is suppressed across the version
-    * boundary rather than crying wolf on all 159 queries at once.
-    * v3 (r16) additionally normalizes NamedLambdaVariable's
-    * session-global fresh-name ordinal (`lambda x_8` → `lambda x_N`):
-    * under v2 a query's hash depended on which OTHER queries ran
-    * earlier in the session, so growing the suite flipped 13 hashes
-    * with bit-identical plans.
-    * v4 (r17) collapsed TRUNCATED (`...`) DataFilters/PushedFilters
-    * metadata echoes; v5 (r18) elides those echoes unconditionally
-    * (keeping the empty-vs-nonempty bit) because a value near the
-    * 100-char abbreviation budget could still flip between truncated
-    * and full across sessions as exprId digits grew.
+  /** 8-hex MD5 of [[planLines]]: the same code on the same data gives the
+    * same hash on any host; a changed join strategy, exchange kind or lost
+    * pushdown changes it (`BenchSpec`, `tools/planstab.sh`).
     */
-  val PlanHashVersion = 5
+  private[graft] def planFingerprint(plan: SparkPlan): String =
+    java.security.MessageDigest.getInstance("MD5")
+      .digest(planLines(plan).mkString("\n").getBytes(UTF_8))
+      .take(4).map(b => f"${b & 0xff}%02x").mkString
 
-  /** Queries whose EXECUTED plan is legitimately bistable on identical
-    * code: AQE's runtime broadcast↔SMJ choice lands on a
-    * near-threshold frame, so two identical runs genuinely execute
-    * different (both correct) strategies. Named residual per query —
-    * the planstab criterion for an allowlisted entry. Excluded from
-    * `plan_changes` (still hashed and published) so the guard never
-    * cries wolf on a coin-flip; every other query must hash stable.
-    *
-    *  - q105_winnow_matches: the df-capped MOSS fingerprint pair join
-    *    sits at the adaptive broadcast threshold at sf0.1 — AQE
-    *    broadcasts one run, sort-merges the next (both plans walked by
-    *    the winnowing specs; at 100 TB the frame outgrows the
-    *    threshold and SMJ wins deterministically).
-    *
-    * q157_bm25_incremental was allowlisted in r15 (three hashes across
-    * three identical runs) and DE-allowlisted in r16: the flip was the
-    * unhinted per-doc dl join in the shared scoring tail sitting at
-    * AQE's runtime threshold; it is now pinned to sort-merge (the only
-    * 100 TB-viable strategy for a corpus-sized frame) and three runs
-    * hash one way (2c8b6f54) — see Bm25.scoreAndTop.
+  /** A quality probe's JSON object, or `{"error":true}` when it fails, so
+    * the bench line stays parseable.
     */
-  val AdaptivePlanAllowlist: Set[String] =
-    Set("q105_winnow_matches")
-
-  /** Stable 8-hex fingerprint of a query's EXECUTED physical plan
-    * (the caller collects through the dataset's own QueryExecution
-    * first, so the AQE tree here is final — runtime join-strategy
-    * flips ARE captured). Run-varying tokens are normalized away so
-    * the hash tracks SHAPE (operator tree, join strategies,
-    * exchanges), not identity: expr ids (#123), plan/stage ids,
-    * temp-dir paths, partition/row statistics, AQE annotations,
-    * codegen-stage ordinals, and the bistable broadcast build side
-    * (hashing a sorted multiset of node lines — see below) all churn
-    * between identical runs; what remains is exactly what a PlanSpec
-    * gate would read. Same code + same data ⇒ same hash (asserted for
-    * ALL queries by `tools/planstab.sh`, two full runs); a
-    * broadcast→SMJ flip ⇒ different hash (proven non-vacuously by the
-    * same tool's threshold-flip scratch run).
-    *
-    * SPARK_GRAFT_PLAN_DUMP=dir writes each query's normalized text to
-    * dir/<name>.txt so any future churn diffs in seconds.
-    */
-  private def planFingerprint(name: String,
-      df: org.apache.spark.sql.DataFrame): String = {
-    val plan = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
-      .queryExecution.executedPlan.toString
-    val norm = plan
-      .replaceAll("#\\d+[A-Z]*", "#x")
-      .replaceAll("\\[id=#?\\d+\\]", "")
-      .replaceAll("\\[plan_id=\\d+\\]", "")
-      .replaceAll("(?i)(file|hdfs|s3a?):[^,\\s\\]\\)]+", "PATH")
-      .replaceAll("/[^,\\s\\]\\)]*(tmp|temp)[^,\\s\\]\\)]*", "PATH")
-      .replaceAll("isFinalPlan=(true|false)", "")
-      .replaceAll("\\(\\d+ paths?\\)", "(paths)")
-      .replaceAll("cachedrdd-\\d+", "cachedrdd")
-      .replaceAll("ReusedExchange \\[[^\\]]*\\]", "ReusedExchange")
-      // the final AQE tree prints runtime artifacts a re-run never
-      // reproduces: query-stage ordinals, shuffle/broadcast stage
-      // statistics (rowCount, sizeInBytes), coalesced-partition
-      // counts, and subquery result ids — all statistics, not shape
-      .replaceAll("Statistics\\([^)]*\\)", "Statistics()")
-      .replaceAll("coalesced( \\d+ partitions)?", "coalesced")
-      .replaceAll("\\d+ partitions", "N partitions")
-      .replaceAll("stage-\\d+", "stage-N")
-      .replaceAll("QueryStage \\d+", "QueryStage N")
-      // whole-stage-codegen stage ordinals (*(5) HashAggregate...)
-      // number stages in MATERIALIZATION order, which AQE's parallel
-      // stage scheduling makes run-varying — the r13 full-suite churn
-      // on q133/q137/q158; pure identity, the tree shape is unchanged
-      .replaceAll("\\*\\(\\d+\\)", "*(N)")
-      // JVM object identity of closures: MapPartitions prints the
-      // lambda's hidden-class id + address + hashCode
-      // ($$Lambda$5141/0x00007f85ed406178@2fedae96) — this was the
-      // r12 churn on q13/q31/q53/q79 (all four carry an object-plan
-      // MapPartitions/UDAF node), pure run identity, zero shape
-      .replaceAll("\\$\\$Lambda\\$\\d+/0x[0-9a-fA-F]+", "\\$\\$Lambda")
-      .replaceAll("@[0-9a-fA-F]{6,}", "@obj")
-      // higher-order-function lambda variables print with a
-      // SESSION-GLOBAL ordinal (`lambda x_8#x` — NamedLambdaVariable's
-      // fresh-name counter), so WHICH queries ran earlier in the same
-      // session changes the token: the r16 full-suite runs flipped 13
-      // hashes (the transform/filter/aggregate users — kmeans family,
-      // BM25, q148) purely because the suite GREW and shifted every
-      // later query's counter; proven by identical plan dumps whose
-      // only diff was x_8 vs x_25 (plan_hash_ver 2 → 3)
-      .replaceAll("lambda ([A-Za-z]+)_\\d+", "lambda $1_N")
-      // FileScan metadata fields are ABBREVIATED to a 100-char budget
-      // BEFORE exprId normalization, so the truncation point depends
-      // on how many digits the session's exprIds had grown to — the
-      // same plan prints `...) > 0....` in one session and `...) > ...`
-      // in another (r17: q112/q85 flipped between two full runs on
-      // identical code; plan dumps differed ONLY at the DataFilters
-      // cut). v4 collapsed only values carrying the `...` marker, but
-      // a value sitting NEAR the 100-char budget can be truncated in
-      // one session and printed in full in another (exprId digit
-      // growth changes its length), so v5 (r18, ADVICE) elides the
-      // DataFilters/PushedFilters echo UNCONDITIONALLY, keeping only
-      // the empty-vs-nonempty bit: the full Filter node lines already
-      // carry the predicate shape, and [SOME] still trips the hash if
-      // a pushdown is lost entirely ([SOME] → [NONE]).
-      .replaceAll("(DataFilters|PushedFilters): \\[\\]", "$1: [NONE]")
-      .replaceAll(
-        "(?m)(DataFilters|PushedFilters): \\[(?!NONE\\])" +
-          ".*?(?=, [A-Z][A-Za-z]*: |$)",
-        "$1: [SOME]")
-    // the hash is over the SORTED SET of normalized node lines, not
-    // the tree text: two identical runs legitimately differ in (a)
-    // AQE's broadcast BUILD-SIDE choice on symmetric inputs (BuildLeft
-    // one run, BuildRight the next, subtrees swapped — measured on
-    // q110/q142/q146/q162) and (b) WHICH of two equivalent exchanges
-    // gets materialized vs wrapped in ReusedExchange (measured on
-    // q105). Sorting DISTINCT lines (Build token + broadcast-mode key
-    // ordinal normalized; pure wrapper lines — query stages, reuse
-    // markers, AQE shuffle reads — dropped) erases both, while every
-    // strategy flip the guard hunts still lands: broadcast→SMJ adds
-    // SortMergeJoin/Sort lines, a new exchange adds a distinct
-    // Exchange line, a lost pushdown changes the FileScan line.
-    val canon = norm
-      .replaceAll("Build(Left|Right)", "BuildSide")
-      // the broadcast-mode key ordinal tracks the (bistable) build
-      // side too: input[0,...] when the left child is built, input[1]
-      // when the right is — same key, same mode, side residue
-      .replaceAll("input\\[\\d+, ", "input[i, ")
-      .linesIterator
-      .map(_.replaceAll("^[\\s:+\\-]*", ""))
-      .filter(_.nonEmpty)
-      .filterNot(l => l.startsWith("ReusedExchange") ||
-        l.contains("QueryStage") || l.startsWith("AQEShuffleRead"))
-      .toSeq.distinct.sorted
-      .mkString("\n")
-    sys.env.get("SPARK_GRAFT_PLAN_DUMP").foreach { dir =>
-      try {
-        val d = java.nio.file.Paths.get(dir)
-        java.nio.file.Files.createDirectories(d)
-        java.nio.file.Files.writeString(d.resolve(s"$name.txt"),
-          norm + "\n==== canonical (hashed) ====\n" + canon)
-      } catch { case _: Throwable => () }
+  private def probe(name: String)(body: => String): String =
+    try body catch { case NonFatal(e) =>
+      System.err.println(s"[bench] $name probe failed: ${e.getMessage}")
+      """{"error":true}"""
     }
-    val md = java.security.MessageDigest.getInstance("MD5")
-      .digest(canon.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    md.take(4).map(b => f"${b & 0xff}%02x").mkString
-  }
 
-  /** Fixed CPU-bound probe (no IO, whole-stage codegen): its min-of-3
-    * tracks available compute, not the engine under test. ~0.1 s on a
-    * calm 32-thread host — cheap enough to run three times per bracket.
+  /** Approximate-tier quality: recall@5 of the sign-LSH (q52), IVF (q55),
+    * PQ (q127) and IVF-PQ (q131) top-k against the exact q45 brute force,
+    * plus the SemDeDup planted-pair recall (the fraction of q100's
+    * cosine-1 planted twins grouped with their original; 1.0 by
+    * construction, so any dip is a defect).
     */
-  private def canarySecs(spark: SparkSession): Double = {
-    import org.apache.spark.sql.functions.{col, sum}
-    (1 to 3).map { _ =>
-      val t0 = System.nanoTime()
-      spark.range(0L, 200000000L, 1L, 32)
-        .select(sum(col("id"))).collect()
-      (System.nanoTime() - t0) / 1e9
-    }.min
-  }
-
-  /** Sustained throughput of the X46 streaming-curation loop: n docs
-    * (every 7th low-quality — the gate wins i%70 collisions; every
-    * other 10th a near-dup of the nearest PRECEDING SURVIVING doc, so
-    * the dup source is always a text that actually entered the index)
-    * through
-    * gate → redact → index probe → kept/index appends across four
-    * micro-batches — the full per-batch cost including the parquet and
-    * bucketed-index writes, not just the transforms. NOTE the number is
-    * fixed-cost-dominated at these 1000-doc batches (each ingest runs
-    * ~a dozen jobs: materializations, gates, two writes); the X25
-    * contract is per-batch cost ∝ batch size, so production-sized crawl
-    * batches amortize the constant — this entry exists to make
-    * regressions in that constant visible, not to claim peak rate.
-    */
-  /** Approximate-tier QUALITY, tracked per round alongside throughput
-    * (VERDICT r7 item 5: recall thresholds living only in pass/fail
-    * specs can't surface gradual regressions — an artifact diff can).
-    * recall@5 of the sign-LSH (q52) and IVF (q55) top-k against the
-    * exact q45 brute-force baseline on the bench corpus, plus the
-    * SemDeDup planted-pair recall (fraction of q100's cosine-1 planted
-    * twins grouped with their original — 1.0 by construction, so any
-    * dip is a real defect, not tuning).
-    */
-  private def annRecall(spark: SparkSession, sfDir: String): String = {
-    import org.apache.spark.sql.functions.col
-    try {
-      def topSets(df: org.apache.spark.sql.DataFrame): Map[Long, Set[Long]] =
-        df.collect().map(r => (r.getLong(0), r.getLong(2))).groupBy(_._1)
+  private def annRecall(spark: SparkSession, sfDir: String): String =
+    probe("ann recall") {
+      import org.apache.spark.sql.functions.col
+      def topSets(df: DataFrame, idCol: Int): Map[Long, Set[Long]] =
+        df.collect().map(r => (r.getLong(0), r.getLong(idCol))).groupBy(_._1)
           .view.mapValues(_.map(_._2).toSet).toMap
-      val brute = topSets(operators.SimilarityQueries.q45.build(spark, sfDir))
+      val brute = topSets(operators.SimilarityQueries.q45.build(spark, sfDir), 2)
       def recallAt5(approx: Map[Long, Set[Long]]): Double =
         brute.keysIterator.map(q =>
           (approx.getOrElse(q, Set.empty[Long]) intersect brute(q)).size)
           .sum.toDouble / (brute.size * 5)
-      val lsh = recallAt5(topSets(operators.SketchQueries.q52.build(spark, sfDir)))
-      val ivf = recallAt5(topSets(operators.SketchQueries.q55.build(spark, sfDir)))
-      // q127's shape is (qid, vec_id, rank, adc_dist) — own mapping
+      val lsh = recallAt5(topSets(operators.SketchQueries.q52.build(spark, sfDir), 2))
+      val ivf = recallAt5(topSets(operators.SketchQueries.q55.build(spark, sfDir), 2))
       // q127/q131 share the (qid, vec_id, rank, dist) shape
-      def pqSets(df: org.apache.spark.sql.DataFrame): Map[Long, Set[Long]] =
-        df.collect().map(r => (r.getLong(0), r.getLong(1))).groupBy(_._1)
-          .view.mapValues(_.map(_._2).toSet).toMap
-      val pq = recallAt5(pqSets(operators.SketchQueries.q127.build(spark, sfDir)))
-      val ivfpq = recallAt5(pqSets(operators.SketchQueries.q131.build(spark, sfDir)))
+      val pq = recallAt5(topSets(operators.SketchQueries.q127.build(spark, sfDir), 1))
+      val ivfpq = recallAt5(topSets(operators.SketchQueries.q131.build(spark, sfDir), 1))
       val groups = operators.SimilarityQueries.q100.build(spark, sfDir)
         .select(col("vec_id"), col("group_id")).collect()
         .map(r => (r.getLong(0), r.getLong(1))).toMap
@@ -678,22 +236,15 @@ object Bench {
         groups.get(i + 1000000L).contains(groups(i)))
       val sem = twinned.toDouble / nBase
       f"""{"lsh_at5":$lsh%.4f,"ivf_at5":$ivf%.4f,"pq_at5":$pq%.4f,"ivfpq_at5":$ivfpq%.4f,"semdedup_planted":$sem%.4f}"""
-    } catch { case e: Throwable =>
-      // the bench line must stay parseable even if a recall probe dies
-      System.err.println(s"[bench] ann recall probe failed: ${e.getMessage}")
-      """{"error":true}"""
     }
-  }
 
-  /** b-bit estimator QUALITY (VERDICT r9 item 6): MAE and signed bias
-    * of the Li–König corrected Ĵ against EXACT Jaccard on the bench
-    * corpus's candidate pairs — the BbitMinHashSpec oracle promoted
-    * into the artifact (the ann_recall precedent) so the packed tier's
-    * accuracy is tracked round-over-round, not just pass/failed. The
-    * collects are the bounded τ≥0.05 pair lists, not the corpus.
+  /** b-bit estimator quality: MAE and signed bias of the Li–König
+    * corrected Ĵ against exact Jaccard on the bench corpus's candidate
+    * pairs. The collects are the bounded τ≥0.05 pair lists, not the
+    * corpus.
     */
-  private def bbitQuality(spark: SparkSession, sfDir: String): String = {
-    try {
+  private def bbitQuality(spark: SparkSession, sfDir: String): String =
+    probe("bbit quality") {
       val docs = graft.sources.Tables(spark, sfDir, "documents")
       val exact = operators.DedupQueries
         .bruteJaccardPairs(operators.MinHashDedup.shingles(docs), 0.05)
@@ -714,25 +265,17 @@ object Bench {
         f"""{"mae":$mae%.4f,"raw_bias":$raw%.4f,""" +
           f""""corr_bias":$corr%.4f,"pairs":$n}"""
       }
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] bbit quality probe failed: ${e.getMessage}")
-      """{"error":true}"""
     }
-  }
 
-  /** X99's GK swap, tracked per round (VERDICT r12 item 6: the
-    * 5.2×/4.2× boundary-pass win lived only in SCALE.md, so a
-    * regression in the `approx = true` path was invisible round to
-    * round). Publishes the GK and exact boundary-pass times over the
-    * bench corpus (min-of-2 each) plus the GK boundaries' MAX RANK
-    * ERROR against the exact target ranks i·n/k — the Greenwald–Khanna
-    * guarantee is ≤ ε·n with ε = 1/10000, so `max_rank_err` (as a
-    * fraction of n) drifting above ~2e-4 flags a broken sketch path
-    * even while the exact q148 stays green.
+  /** GK versus exact equi-depth boundary pass over the bench corpus
+    * (min-of-2 each), plus the GK boundaries' maximum rank error against
+    * the exact target ranks i·n/k as a fraction of n. Greenwald–Khanna
+    * guarantees ≤ ε = 1/10000, so `max_rank_err` above ~2e-4 flags a
+    * broken sketch path even while the exact q148 stays green.
     */
-  private def gkHistogram(spark: SparkSession, sfDir: String): String = {
-    import org.apache.spark.sql.functions._
-    try {
+  private def gkHistogram(spark: SparkSession, sfDir: String): String =
+    probe("gk histogram") {
+      import org.apache.spark.sql.functions._
       val li = graft.sources.Tables(spark, sfDir, "lineitem")
         .select(col("l_extendedprice").cast("double").as("v"))
       def timed(approx: Boolean): Double =
@@ -759,12 +302,19 @@ object Bench {
       }.max
       f"""{"gk_secs":$gkSecs%.3f,"exact_secs":$exactSecs%.3f,""" +
         f""""max_rank_err":$maxErr%.6f}"""
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] gk histogram probe failed: ${e.getMessage}")
-      """{"error":true}"""
     }
-  }
 
+  /** Sustained throughput of the streaming-curation loop: n docs (every
+    * 7th low-quality, and the gate wins i%70 collisions; every other 10th
+    * a near-dup of the nearest preceding surviving doc, so the dup source
+    * is always a text that actually entered the index) through gate →
+    * redact → index probe → kept/index appends across four micro-batches,
+    * the full per-batch cost including the parquet and bucketed-index
+    * writes. The number is fixed-cost-dominated at these 1000-doc batches
+    * (each ingest runs about a dozen jobs), so it makes regressions in
+    * that constant visible rather than claiming a peak rate. `packed`
+    * selects the packed prefilter.
+    */
   private def curationIngestRate(spark: SparkSession,
       packed: Boolean = false): Double = {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -776,10 +326,7 @@ object Bench {
       if (i % 7 == 0) "too short" // gated out (wins i%70 collisions)
       else {
         val base = (0 until 20).map(j => words((i * 7 + j * 3) % words.length))
-        // every 10th doc near-duplicates the nearest preceding
-        // NON-GATED doc (never two consecutive multiples of 7, so one
-        // step back at most) — duplicating a gated-out "too short"
-        // predecessor would make the doc unique, not a near-dup
+        // never two consecutive multiples of 7: one step back at most
         val src = if (i % 10 == 0 && i > 0) {
           val p = if ((i - 1) % 7 == 0) i - 2 else i - 1
           (0 until 20).map(j => words((p * 7 + j * 3) % words.length)).drop(1)
@@ -788,12 +335,11 @@ object Bench {
       }
     }
     val tbl = if (packed) "bench_cur_idx_pk" else "bench_cur_idx"
-    val idxPath = java.nio.file.Files.createTempDirectory(tbl)
+    val idxPath = Files.createTempDirectory(tbl)
     val keptDir = idxPath.resolve("kept").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("bench-cur-ckpt")
+    val ckpt = Files.createTempDirectory("bench-cur-ckpt")
     val input = MemoryStream[(Long, String)](spark)
     val t0 = System.nanoTime()
-    var processed = 0
     try {
       (0 until 4).foreach { b =>
         val batch = (b * n / 4) until ((b + 1) * n / 4)
@@ -803,54 +349,28 @@ object Bench {
           tbl, idxPath.toString, keptDir, ckpt.toString,
           threshold = 0.5, buckets = 8, packed = packed)
         q.awaitTermination(300000)
-        processed += batch.size
       }
-      val secs = (System.nanoTime() - t0) / 1e9
-      math.rint(processed / secs * 10) / 10
+      math.rint(n / ((System.nanoTime() - t0) / 1e9) * 10) / 10
     } catch {
-      case e: Throwable =>
+      case NonFatal(e) =>
         System.err.println(s"[bench] curation rate FAILED: ${e.getMessage}")
         -1.0
     } finally {
       spark.sql(s"DROP TABLE IF EXISTS ${tbl}_sigs")
       spark.sql(s"DROP TABLE IF EXISTS ${tbl}_buckets")
+      FileUtils.deleteDirectory(idxPath.toFile)
+      FileUtils.deleteDirectory(ckpt.toFile)
     }
   }
 
-  private def streamingRates(spark: SparkSession)
-      : (Double, Double, Double) = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+  /** Frames per second of the real vehicle decode: frames of a genuine
+    * 64×48 JPEG through parse → unbase64 → executor-side ImageIo decode
+    * and features. `extractFeatures` is a `mapPartitions`, so the count
+    * cannot prune the decode away.
+    */
+  private def vehicleRealFps(spark: SparkSession): Double = {
     import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.streaming.Trigger
     import spark.implicits._
-
-    // ABSA: n reviews through parse → normalizeVi → score → sink
-    val n = 20000
-    val input = MemoryStream[String](spark)
-    input.addData((0 until n).map(i =>
-      s"""{"id": "$i", "review": "Hang ve dep lam nha ship than thien so $i"}"""))
-    val artifact = java.nio.file.Files
-      .createTempDirectory("bench-model").resolve("model.bin")
-    java.nio.file.Files.writeString(artifact, "w")
-    val provider = new graft.streaming.ScorerProvider(artifact)
-    val counted = new java.util.concurrent.atomic.AtomicLong(0L)
-    val t0 = System.nanoTime()
-    val q = graft.streaming.AbsaPipeline
-      .sink(graft.streaming.AbsaPipeline.parse(input.toDF()), provider,
-        writePrimary = (df, _) => counted.addAndGet(df.count()),
-        onFallback = (_, _, e) => throw e,
-        checkpointDir = java.nio.file.Files
-          .createTempDirectory("bench-ckpt").toString,
-        trigger = Trigger.AvailableNow())
-      .start()
-    q.awaitTermination(300000)
-    val absaSecs = (System.nanoTime() - t0) / 1e9
-    val absaRate = if (counted.get() == n) n / absaSecs else -1.0
-
-    // vehicle (real codec): mr frames of a genuine 64×48 JPEG through
-    // parse → unbase64 → executor-side ImageIo decode + features —
-    // the honest decode-included fps next to the mock-detector number
-    // (VERDICT r9 item 7)
     val mr = 20000
     val jpeg = {
       val img = new java.awt.image.BufferedImage(64, 48,
@@ -873,22 +393,6 @@ object Bench {
         .as[graft.operators.Multimodal.MediaRow],
       graft.operators.ImageIoDecoder).count()
     val realSecs = (System.nanoTime() - tr) / 1e9
-    val vehicleRealFps =
-      if (realCnt == mr) math.rint(mr / realSecs * 10) / 10 else -1.0
-
-    // vehicle: m frames through parse → detect → shape
-    val m = 50000
-    val payload = java.util.Base64.getEncoder.encodeToString(
-      Array.tabulate[Byte](512)(_.toByte))
-    val frames = spark.range(m).select(
-      concat(lit("""{"camera_id": "CAM_"""), col("id") % 3,
-        lit("""", "timestamp": """), col("id").cast("double"),
-        lit(""", "frame_data": """"), lit(payload), lit("\"}")).as("value"))
-    val t1 = System.nanoTime()
-    val cnt = graft.streaming.VehiclePipeline.transformAll(frames, None).count()
-    val vehSecs = (System.nanoTime() - t1) / 1e9
-    val vehicleRate = if (cnt == m) m / vehSecs else -1.0
-    (math.rint(absaRate * 10) / 10, math.rint(vehicleRate * 10) / 10,
-      vehicleRealFps)
+    if (realCnt == mr) math.rint(mr / realSecs * 10) / 10 else -1.0
   }
 }

@@ -71,6 +71,27 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     registry.map(q => q.name -> q.build).toMap
 
+  /** The registered queries that a comma-separated list of name prefixes
+    * selects (`q149,q162`: a prefix matches the name itself or
+    * `<prefix>_…`), or all of them when the list is absent or empty. A
+    * prefix that matches no query is an error, so a mistyped list never
+    * runs an empty suite. `Verify` and `Bench` read the list from
+    * `SPARK_GRAFT_ONLY`.
+    */
+  def select(only: Option[String])
+      : Map[String, (SparkSession, String) => DataFrame] = {
+    val all = queries
+    val prefixes = only.toSeq.flatMap(_.split(",")).map(_.trim)
+      .filter(_.nonEmpty)
+    def matches(name: String, p: String) =
+      name == p || name.startsWith(p + "_")
+    val unmatched = prefixes.filterNot(p => all.keys.exists(matches(_, p)))
+    require(unmatched.isEmpty,
+      s"query prefixes match no registered query: ${unmatched.mkString(",")}")
+    if (prefixes.isEmpty) all
+    else all.filter { case (name, _) => prefixes.exists(matches(name, _)) }
+  }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for non-SQL-expressible ops.
     * q88's entry is generated AFTER the queries run (r19): its encode

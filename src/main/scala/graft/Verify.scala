@@ -6,18 +6,13 @@ import scala.util.control.NonFatal
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
+    val selected = SparkEntry.select(sys.env.get("SPARK_GRAFT_ONLY"))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     // ONE source of session truth (GraftSession) so parquet/timezone
     // semantics can't drift between the entry points (ADVICE r8)
     val spark = GraftSession.local(cpus)
     new java.io.File(outDir).mkdirs()
-    // local iteration: SPARK_GRAFT_ONLY=q35,q36 dumps a subset
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    SparkEntry.queries
-      .filter { case (name, _) =>
-        only.forall(_.exists(p => name == p || name.startsWith(p + "_")))
-      }
-      .foreach { case (name, fn) =>
+    selected.foreach { case (name, fn) =>
       // per-query conf isolation (see Bench): graph queries scale
       // shuffle partitions with their input; reset between queries
       spark.conf.set("spark.sql.shuffle.partitions", cpus.toString)

@@ -134,8 +134,11 @@ object KmvSketch {
         .groupBy(col("src_a"), col("src_b"))
         .agg(count(lit(1)).as("k_inter"))
 
+      // kin holds at most one row per source pair; the hint pins the
+      // join, which AQE otherwise planned as broadcast in some identical
+      // runs and as sort-merge in others
       thr
-        .join(kin, Seq("src_a", "src_b"), "left")
+        .join(broadcast(kin), Seq("src_a", "src_b"), "left")
         .na.fill(0L, Seq("k_inter"))
         .withColumn("n_eff", least(col("n_u"), lit(K.toLong)))
         // micro-unit Jaccard: (2e6·k∩ + n) div (2n), exact in longs

@@ -14,4 +14,15 @@ trait SparkSpec extends AnyFunSuite {
 
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** Runs `body` with the given session confs set, then restores them. */
+  def withConf[T](kvs: (String, String)*)(body: => T): T = {
+    val old = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally old.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
 }

@@ -88,4 +88,14 @@ class KmvSpec extends AnyFunSuite with SparkSpec {
     assert(disjoint.getAs[Long]("k_inter") === 0L)
     assert(disjoint.getAs[Double]("est_inter") === 0.0)
   }
+
+  test("q126 broadcasts its per-pair counts even with size-based broadcast off") {
+    val lines = withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1",
+        "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1") {
+      graft.Bench.planLines(graft.Bench
+        .materialize(KmvSketch.q126.build(spark, sf0001)).executedPlan)
+    }
+    assert(lines.contains("BroadcastHashJoin LeftOuter"), lines)
+    assert(!lines.contains("SortMergeJoin LeftOuter"), lines)
+  }
 }
